@@ -96,44 +96,29 @@ def _deletes_vector(spark, fs, path: str):
     ).distinct()
 
 
-def _heal_tiered_merges(fs, path: str) -> None:
-    """Finish (or abort) a size-tiered merge a crashed compact left
-    behind, for each of the index's file-tiered tables — the shared
-    journal-guided recovery (``storage.store._heal_tiered_swap``) run by
-    every write path BEFORE the plain ``*.old`` restore (which would put
-    back an aside dir already missing its moved kept files)."""
-    from comet_spark.storage.store import _heal_tiered_swap
+def _meta_buckets(spark, fs, path: str) -> int:
+    """The bucket count :meth:`BM25.write` recorded in ``meta`` — 0 only
+    when ``meta`` does not exist (an index written before it did). Any
+    other read error propagates: reading a damaged ``meta`` as
+    "unbucketed" would append bucket-less part files into a bucketed
+    ``postings``."""
+    if not fs.exists(f"{path}/meta"):
+        return 0
+    return int(spark.read.parquet(f"{path}/meta").first()["buckets"])
 
-    for sub in ("postings", "doc_len"):
-        _heal_tiered_swap(fs, f"{path}/{sub}")
 
+def _heal_tables(fs, path: str) -> None:
+    """EVERY index write path's entry heal, under the writer lock:
+    ``storage.store._heal_dir`` on each of the four tables (crash states:
+    that module's docstring). It must run on write/append too, not just
+    on a compact re-run: ``append`` RECREATES a missing table directory
+    on its mode-append write, so an append landing on a crashed
+    compact's df/stats window would rebuild those tables from one batch
+    — silently inflating idf for every pre-existing term."""
+    from comet_spark.storage.store import _heal_dir
 
-def _heal_index_dirs(fs, path: str) -> None:
-    """EVERY index write path's entry heal, in the required order: the
-    journal-guided tiered recovery first, then the plain between-renames
-    restore (live dir absent, ``*.old`` present → rename back) for each
-    of the four tables. The plain restore must run on write/append too,
-    not just on a compact re-run: ``append`` RECREATES a missing table
-    directory on its mode-append write, so an append landing on a
-    crashed compact's df/stats window would rebuild those tables from
-    one batch — silently inflating idf for every pre-existing term —
-    and the next compact's ``.old`` cleanup would then delete the only
-    surviving copy of the original for good."""
-    _heal_tiered_merges(fs, path)
     for sub in ("doc_len", "postings", "df", "stats"):
-        cur, old = f"{path}/{sub}", f"{path}/{sub}.old"
-        if not fs.exists(cur) and fs.exists(old):
-            if not fs.rename(old, cur):
-                raise OSError(
-                    f"could not restore {old} left by a crashed compact"
-                )
-        elif fs.exists(cur) and fs.exists(old):
-            # post-install crash leftover. Deleting it promptly matters
-            # beyond tidiness: a stale .old that lingered could later be
-            # "restored" over a table a full WRITE was mid-overwriting
-            # when it crashed — masking the tear and feeding ancient
-            # stats to the route probe instead of forcing the rebuild.
-            fs.delete(old)
+        _heal_dir(fs, f"{path}/{sub}")
 
 
 def _tiered_merge(
@@ -163,14 +148,11 @@ def _tiered_merge(
     own single output file — so a pass costs O(#rungs) jobs, not
     O(#buckets).
 
-    Crash safety: the kept-file names are journaled (atomic write)
-    BEFORE any mutation; every crash point is then either aborted or
-    completed deterministically by :func:`_heal_tiered_merges` — see
-    there. Multi-rung output writes all happen into the side dir before
-    the journal lands, so the multi-output pass inherits the same
-    abort-or-complete guarantee. As with the full swap, the live dir is
-    momentarily absent mid-protocol: readers fail loudly, never
-    silently wrong."""
+    Installs with ``storage.store._swap_dir``, the kept files as its
+    ``keep`` entries (crash states: that module's docstring). Multi-rung
+    output writes all happen into the side dir before the journal lands,
+    so the multi-output pass inherits the same abort-or-complete
+    guarantee."""
     cur = f"{path}/{sub}"
     files = [
         (n, s) for n, s in fs.list_status(cur) if n.startswith("part-")
@@ -187,11 +169,7 @@ def _tiered_merge(
             groups.setdefault(int(m.group(1)), []).append((n, s))
     else:
         groups[0] = files
-    from comet_spark.storage.store import (
-        _pick_tier_merge,
-        _size_class,
-        _tiered_swap,
-    )
+    from comet_spark.storage.store import _pick_tier_merge, _size_class, _swap_dir
 
     kept, sets = [], []
     for g in groups.values():
@@ -248,7 +226,7 @@ def _tiered_merge(
                     raise OSError(f"tiered merge: could not stage {n}")
             fs.delete(scratch)
 
-    _tiered_swap(fs, cur, kept, _write_side)
+    _swap_dir(fs, cur, kept, _write_side)
     return True
 
 
@@ -389,7 +367,7 @@ class BM25:
         with _index_writer_lock(spark, path, "write"):
             from comet_spark.storage.store import _FS
 
-            _heal_index_dirs(_FS(spark, path), path)
+            _heal_tables(_FS(spark, path), path)
             if buckets > 0:
                 name = _postings_table_name(path)
                 (
@@ -418,9 +396,8 @@ class BM25:
 
     @classmethod
     def heal(cls, spark, path: str) -> None:
-        """Recover a crashed write/append/compact explicitly: finish or
-        abort any interrupted tiered merge (journal-guided) and restore
-        any table caught between a swap's two renames. Runs UNDER the
+        """Recover a crashed write/append/compact explicitly: resolve any
+        interrupted table swap (``storage.store._heal_dir``). Runs UNDER the
         writer lock — the heal renames directories, and doing that
         lock-free could interleave with a live compactor mid-swap
         (resurrecting the aside dir it is about to install over). All
@@ -429,7 +406,7 @@ class BM25:
         from comet_spark.storage.store import _FS
 
         with _index_writer_lock(spark, path, "heal"):
-            _heal_index_dirs(_FS(spark, path), path)
+            _heal_tables(_FS(spark, path), path)
 
     @classmethod
     def force_unlock(cls, spark, path: str) -> None:
@@ -451,12 +428,12 @@ class BM25:
         bucket spec must come from metadata, files alone don't carry
         it) — so the bucketed layout, not a rebuild, is the default
         query path across sessions."""
+        from comet_spark.storage.store import _FS
+
         ix = cls.__new__(cls)
+        fs = _FS(spark, path)
         if buckets is None:
-            try:
-                buckets = int(spark.read.parquet(f"{path}/meta").first()["buckets"])
-            except Exception:  # pre-meta index directories
-                buckets = 0
+            buckets = _meta_buckets(spark, fs, path)
         if buckets > 0:
             name = _postings_table_name(path)
             if not spark.catalog.tableExists(name):
@@ -514,9 +491,7 @@ class BM25:
         # directory, which _deletes_vector reads as no-deletes — is
         # tolerated; a read error on committed files propagates loudly:
         # silently dropping the vector would resurrect soft-deleted docs.
-        from comet_spark.storage.store import _FS
-
-        dels = _deletes_vector(spark, _FS(spark, path), path)
+        dels = _deletes_vector(spark, fs, path)
         if dels is not None:
             ix.del_ids = dels
             ix.doc_len = ix.doc_len.join(
@@ -585,11 +560,9 @@ class BM25:
         with _index_writer_lock(spark, path, "append"):
             from comet_spark.storage.store import _FS
 
-            _heal_index_dirs(_FS(spark, path), path)
-            try:
-                buckets = int(spark.read.parquet(f"{path}/meta").first()["buckets"])
-            except Exception:  # pre-meta index directories
-                buckets = 0
+            fs = _FS(spark, path)
+            _heal_tables(fs, path)
+            buckets = _meta_buckets(spark, fs, path)
             if "total_dl" not in spark.read.parquet(f"{path}/stats").columns:
                 raise ValueError(
                     "append(): index was written by a version without "
@@ -704,7 +677,7 @@ class BM25:
             ids_df = spark.createDataFrame([(int(i),) for i in ids], "id bigint")
         fs = _FS(spark, path)
         with _index_writer_lock(spark, path, "delete"):
-            _heal_index_dirs(fs, path)
+            _heal_tables(fs, path)
             ledger = spark.read.parquet(f"{path}/doc_len").select("id")
             # normalize to the LEDGER's id type before anything is written:
             # a DataFrame call with int32 ids followed by an iterable call
@@ -783,13 +756,10 @@ class BM25:
 
         Each table is value-identical before and after, so the swap
         order across tables cannot produce a wrong reader state; per
-        table the rewrite lands in a side directory and installs via
-        move-aside-then-rename (a crash leaves either the old or the
-        new files, plus at worst a ``*.old``/``*.compacting`` leftover
-        a re-run cleans — including the between-renames window where
-        the live directory is momentarily absent: a re-run first
-        restores ``*.old`` back into place before cleaning). Single-writer, ENFORCED by the shared lock
-        marker (:func:`_index_writer_lock`); open readers after the
+        table the rewrite installs with ``storage.store._swap_dir``
+        (crash states and their heal: that module's docstring; every
+        write path heals at entry). Single-writer, ENFORCED by the shared
+        lock marker (:func:`_index_writer_lock`); open readers after the
         swap. A torn index (a crashed append's doc_len
         segment without its stats commit record) is refused up front —
         rebuild from the corpus first, as :meth:`append` documents.
@@ -821,34 +791,15 @@ class BM25:
         BOUNDED handful of files with O(log) write amplification even
         if a full compact never runs (SCALE_SOAK.json tier_ladder_sim);
         a full compact still restores the exact one-file-per-bucket
-        shape when wanted. Crash
-        recovery is journal-guided (:func:`_heal_tiered_merges` — every
-        write path heals at entry): each crash point either aborts or
-        completes, never double-counts, and readers fail loudly during
-        the instant the directory swaps."""
-        from comet_spark.storage.store import _FS
+        shape when wanted. The tiered merges install through the same
+        swap, so each crash point either aborts or completes and never
+        double-counts."""
+        from comet_spark.storage.store import _FS, _swap_dir
 
         fs = _FS(spark, path)
         with _index_writer_lock(spark, path, "compact"):
-            _heal_index_dirs(fs, path)
-
-            def _restore(sub: str) -> None:
-                # in-run backstop for the entry heal: a crash between two
-                # of THIS run's swaps leaves the just-crashed table in the
-                # between-renames state (``.old`` = original), and the
-                # cleanup below would otherwise destroy both copies
-                cur, old = f"{path}/{sub}", f"{path}/{sub}.old"
-                if not fs.exists(cur) and fs.exists(old):
-                    if not fs.rename(old, cur):
-                        raise OSError(
-                            f"compact: could not restore {old} from a "
-                            "previous crashed compact"
-                        )
-
-            try:
-                buckets = int(spark.read.parquet(f"{path}/meta").first()["buckets"])
-            except Exception:  # pre-meta index directories
-                buckets = 0
+            _heal_tables(fs, path)
+            buckets = _meta_buckets(spark, fs, path)
             stats_rows = spark.read.parquet(f"{path}/stats").collect()
             if len(stats_rows) > 1 and any(
                 "total_dl" not in r.asDict() or r["total_dl"] is None for r in stats_rows
@@ -898,20 +849,7 @@ class BM25:
                 )
 
             def _swap(sub: str, writer) -> None:
-                cur, tmp, old = (
-                    f"{path}/{sub}", f"{path}/{sub}.compacting", f"{path}/{sub}.old",
-                )
-                _restore(sub)  # idempotent backstop; the real pass ran at entry
-                fs.delete(tmp)
-                fs.delete(old)
-                writer(tmp)
-                if not fs.rename(cur, old):
-                    fs.delete(tmp)
-                    raise OSError(f"compact: could not move {cur} aside")
-                if not fs.rename(tmp, cur):
-                    fs.rename(old, cur)  # roll back
-                    raise OSError(f"compact: could not install {tmp}")
-                fs.delete(old)
+                _swap_dir(fs, f"{path}/{sub}", [], writer)
 
             def _finish_small_tables(nf: int, from_live: bool = False) -> None:
                 # df partials OVERLAP per term (unlike the disjoint-by-id

@@ -44,7 +44,6 @@ def knn(
     threshold: float | None = None,
     prefilter: Column | None = None,
     round_to: int | None = 6,
-    single_query: bool = False,
     literal_query: Sequence[float] | None = None,
 ) -> DataFrame:
     """Per-query exact top-k: returns ``(qid, id, score)``.
@@ -53,17 +52,16 @@ def knn(
     (reference ``flat_index_search.go:267-271``). ``prefilter`` is the
     candidate predicate (metadata prefilter / document-ID filter, reference
     ``document_filter.go``) evaluated on ``docs`` before any distance math.
-    ``single_query`` is a caller hint that ``queries`` holds exactly ONE
-    row: the per-qid window top-k (partial/final WindowGroupLimit around
-    an Exchange) collapses to a global ``TakeOrderedAndProject`` — same
-    rows, one fewer shuffle (the qid partitioning is a constant).
-    ``literal_query`` (r14) is the driver-held vector of that one query:
-    the distance is computed against a FOLDED ARRAY LITERAL instead of a
-    one-row broadcast cross join — same doubles through the identical
-    zip_with/aggregate expression, but the plan loses a
-    BroadcastExchange + BroadcastNestedLoopJoin (one whole AQE broadcast
-    wave per query at serving time; guide §2.4 "remove shuffles
-    outright"). Implies ``single_query``.
+    ``literal_query`` (r14) is the driver-held vector of ONE query
+    (``queries`` is then ignored): the distance is computed against a
+    FOLDED ARRAY LITERAL instead of a one-row broadcast cross join —
+    same doubles through the identical zip_with/aggregate expression,
+    but the plan loses a BroadcastExchange + BroadcastNestedLoopJoin
+    (one whole AQE broadcast wave per query at serving time; guide §2.4
+    "remove shuffles outright"). With a single query the per-qid window
+    top-k (partial/final WindowGroupLimit around an Exchange) also
+    collapses to a global ``TakeOrderedAndProject`` — same rows, one
+    fewer shuffle (the qid partitioning is a constant).
     """
     if prefilter is not None:
         docs = docs.filter(prefilter)
@@ -72,7 +70,6 @@ def knn(
     d = docs.select(F.col(id_col).alias("id"), to_double_array(vec_col).alias("__v"))
 
     if literal_query is not None:
-        single_query = True
         qarr = F.array(*[F.lit(float(x)) for x in literal_query])
         score = distance(metric, F.col("__v"), qarr)
         if round_to is not None:
@@ -107,7 +104,7 @@ def knn(
     order = [F.col("score").asc_nulls_last(), F.col("id").asc()]
     out = (
         topk(scored, order, k)
-        if single_query
+        if literal_query is not None
         else topk_per_group(scored, ["qid"], order, k)
     )
     post = (

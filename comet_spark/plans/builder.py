@@ -393,7 +393,6 @@ class VectorSearch:
             vec_col=c.vec_col,
             threshold=self.threshold,
             prefilter=self._prefilter,
-            single_query=single,
             literal_query=self._queries[0] if single else None,
         )
         if single and self.agg in ("sum", "max", "mean"):

@@ -31,6 +31,31 @@ Spark rendering:
 - all filesystem operations go through the Hadoop FileSystem of the
   path's scheme, so the store works on hdfs:// and s3a:// paths, not
   just local disk.
+
+Crash-safe directory swap — the one protocol every rewritten directory
+uses (this store's ``data``, the BM25 index tables, the near-dup
+signature store, the BM25 ingest stream's state log). This module is the
+only one that knows it: owners call :func:`_swap_dir` and :func:`_heal_dir`.
+
+- :func:`_swap_dir` writes the replacement into ``<dir>.compacting``;
+  entries named in ``keep`` are not rewritten but move across by rename
+  (a size-tiered merge keeps its bulk; a full rewrite is ``keep=[]``).
+  Only once the side directory is complete does the journal
+  ``<dir>.tiermove`` (the ``keep`` list) land, atomically. Then ``<dir>``
+  moves aside to ``<dir>.old``, the kept entries move into the side
+  directory, the side directory installs as ``<dir>``, and ``.old`` and
+  the journal go. ``<dir>`` is absent only between move-aside and
+  install: readers then fail loudly, never silently wrong.
+- :func:`_heal_dir` resolves any crash state. With a journal it has
+  three outcomes: ``<dir>`` present and no ``.old`` (nothing moved yet)
+  → ABORT, drop the side directory; ``<dir>`` absent (mid-move) →
+  COMPLETE, move the remaining kept entries and install; both present
+  (crashed after install) → drop the stale ``.old``. Without a journal
+  (a crash before it landed, or a state from the older two-rename swap)
+  a lone ``.old`` is renamed back and leftovers are dropped. Every write
+  path of the owner runs it under the owner's lock (or as the
+  directory's only writer) before reading or writing the directory; a
+  heal interrupted by a crash re-heals identically.
 """
 
 from __future__ import annotations
@@ -161,45 +186,78 @@ class _writer_lock:
         return False
 
 
-def _tiered_swap(fs: _FS, cur: str, kept: list[str], write_side) -> None:
-    """Size-tiered swap of directory ``cur``: ``write_side(side_path)``
-    writes the merged replacement for the NON-kept entries into a side
-    directory, the ``kept`` entries (names directly under ``cur``) move
-    across by RENAME, and the side directory installs over ``cur`` — so
-    the rewrite cost is the merged small entries, never the kept bulk.
+def _swap_paths(cur: str) -> tuple[str, str, str]:
+    """(side dir, aside dir, journal) of a :func:`_swap_dir` on ``cur``."""
+    return cur + ".compacting", cur + ".old", cur + ".tiermove"
 
-    Crash safety: the kept names are journaled ATOMICALLY before any
-    mutation; :func:`_heal_tiered_swap` then either aborts or completes
-    every crash state deterministically. As with the full two-rename
-    swap, ``cur`` is momentarily absent mid-protocol: readers fail
-    loudly, never silently wrong. Callers hold their writer lock."""
+
+def _swap_dir(fs: _FS, cur: str, keep: list[str], write_side) -> None:
+    """Replace directory ``cur`` crash-safely (protocol: module
+    docstring). ``write_side(side_path)`` writes the replacement for
+    every entry NOT named in ``keep``; the ``keep`` entries (names
+    directly under ``cur``) move across by rename, so the rewrite cost
+    is the replaced entries, never the kept bulk. ``keep=[]`` is a full
+    rewrite. Callers hold the owner's writer lock (or are the
+    directory's only writer)."""
     import json
 
-    tmp, old, journal = cur + ".compacting", cur + ".old", cur + ".tiermove"
-    fs.delete(tmp)
-    fs.delete(old)
+    tmp, old, journal = _swap_paths(cur)
+    _heal_dir(fs, cur)  # never drop a crashed predecessor's only copy
     write_side(tmp)
-    clash = set(fs.listdir(tmp)) & set(kept)
+    clash = set(fs.listdir(tmp)) & set(keep)
     if clash:  # write-UUID collision — effectively impossible, but the
         fs.delete(tmp)  # rename-in below must never clobber a kept entry
-        raise OSError(f"tiered swap: merged-entry name collision {sorted(clash)}")
-    fs.write_text(journal, json.dumps({"keep": kept}))
+        raise OSError(f"swap: replacement-entry name collision {sorted(clash)}")
+    fs.write_text(journal, json.dumps({"keep": keep}))
     if not fs.rename(cur, old):
         fs.delete(tmp)
         fs.delete(journal)
-        raise OSError(f"tiered swap: could not move {cur} aside")
+        raise OSError(f"swap: could not move {cur} aside")
     # from here on, a crash is COMPLETED (not aborted) by the heal
-    for n in kept:
+    for n in keep:
         if not fs.rename(f"{old}/{n}", f"{tmp}/{n}"):
             raise OSError(
-                f"tiered swap: could not move {n} — re-run compact to "
-                "complete the interrupted merge"
+                f"swap: could not move {n} — the next write path's heal "
+                "completes the interrupted swap"
             )
     if not fs.rename(tmp, cur):
         raise OSError(
-            f"tiered swap: could not install {tmp} — re-run compact to "
-            "complete the interrupted merge"
+            f"swap: could not install {tmp} — the next write path's heal "
+            "completes the interrupted swap"
         )
+    fs.delete(old)
+    fs.delete(journal)
+
+
+def _heal_dir(fs: _FS, cur: str) -> None:
+    """Resolve whatever a crashed :func:`_swap_dir` left of ``cur``
+    (abort, complete or drop a stale ``.old`` — see the module
+    docstring). Callers hold the lock :func:`_swap_dir` requires."""
+    import json
+
+    tmp, old, journal = _swap_paths(cur)
+    if fs.exists(journal):
+        if not fs.exists(cur):  # crashed mid-move: complete the swap
+            if not fs.exists(tmp):
+                raise OSError(
+                    f"swap recovery: {cur} and {tmp} both missing with "
+                    f"journal present — restore {old} manually"
+                )
+            for n in json.loads(fs.read_text(journal))["keep"]:
+                if fs.exists(f"{old}/{n}") and not fs.rename(
+                    f"{old}/{n}", f"{tmp}/{n}"
+                ):
+                    raise OSError(f"swap recovery: could not move {n}")
+            if not fs.rename(tmp, cur):
+                raise OSError(f"swap recovery: could not install {tmp}")
+        # cur present: nothing moved yet (the side dir only duplicates
+        # live entries — abort) or already installed (.old is stale)
+    elif fs.exists(old) and not fs.exists(cur):
+        if not fs.rename(old, cur):
+            raise OSError(f"swap recovery: could not restore {old}")
+    # a stale .old must go promptly: a later heal after an unrelated
+    # crash could otherwise "restore" it over live data
+    fs.delete(tmp)
     fs.delete(old)
     fs.delete(journal)
 
@@ -326,48 +384,6 @@ def _pick_tier_merge(
     return kept, sets
 
 
-def _heal_tiered_swap(fs: _FS, cur: str) -> None:
-    """Finish (or abort) a :func:`_tiered_swap` a crash interrupted —
-    journal-guided, so recovery is deterministic at every crash point:
-
-    - ``cur`` present, ``.old`` absent → nothing was moved yet; the side
-      dir only duplicates still-live entries — ABORT (drop it).
-    - ``cur`` absent → mid-move; COMPLETE: move any kept entry still in
-      ``.old``, install the side dir, drop ``.old``.
-    - both present → crashed after install; drop the stale ``.old``.
-
-    Without the journal, the plain ``.old``-restore rule would put back
-    an aside dir already missing its moved kept entries — data loss.
-    Every write path of the owning structure must call this (under its
-    lock) BEFORE the plain restore."""
-    import json
-
-    journal = cur + ".tiermove"
-    if not fs.exists(journal):
-        return
-    kept = json.loads(fs.read_text(journal))["keep"]
-    tmp, old = cur + ".compacting", cur + ".old"
-    if fs.exists(cur) and not fs.exists(old):
-        fs.delete(tmp)
-    elif not fs.exists(cur):
-        if not fs.exists(tmp):
-            raise OSError(
-                f"tiered swap recovery: {cur} and {tmp} both missing "
-                f"with journal present — restore {old} manually"
-            )
-        for n in kept:
-            if fs.exists(f"{old}/{n}") and not fs.rename(
-                f"{old}/{n}", f"{tmp}/{n}"
-            ):
-                raise OSError(f"tiered swap recovery: could not move {n}")
-        if not fs.rename(tmp, cur):
-            raise OSError(f"tiered swap recovery: could not install {tmp}")
-        fs.delete(old)
-    else:
-        fs.delete(old)
-    fs.delete(journal)
-
-
 class DocumentStore:
     """LSM-style parquet document store (see module docstring for the
     architecture).
@@ -397,34 +413,6 @@ class DocumentStore:
         """Remove a stale writer lock left by a crashed writer."""
         self._fs.delete(self.lock_path)
 
-    def _restore_crashed_compact_locked(self) -> None:
-        """Heal the one state :meth:`compact`'s two-rename swap can leave
-        behind: a crash between move-aside and install leaves ``data``
-        missing with the original rows in ``data.old`` (and that run's
-        rewrite in ``data.compacting``). Every write path runs this
-        under the lock before touching the segment sequence — without
-        it, an append on the crashed store would start a fresh
-        ``segment=0`` directory and silently orphan the original (a
-        later compact's cleanup would then delete it for good), and a
-        delete would stamp a wrong watermark. Readers keep failing
-        loudly (FileNotFoundError) until a write path heals.
-
-        A crashed TIERED compact heals first (journal-guided — the plain
-        restore rule below would put back an aside dir already missing
-        its moved kept segments)."""
-        _heal_tiered_swap(self._fs, self.data_path)
-        old = self.data_path + ".old"
-        if not self._fs.exists(self.data_path) and self._fs.exists(old):
-            if not self._fs.rename(old, self.data_path):
-                raise OSError(
-                    f"could not restore {old} left by a crashed compact"
-                )
-        elif self._fs.exists(self.data_path) and self._fs.exists(old):
-            # post-install crash leftover — remove promptly so a stale
-            # copy can never be "restored" over live data by a later
-            # heal after an unrelated crash
-            self._fs.delete(old)
-
     # -- write path ----------------------------------------------------------
 
     def _segment_ids(self) -> list[int]:
@@ -451,7 +439,9 @@ class DocumentStore:
         (an event time, an explicit version) — and ``__seq`` is taken
         from it directly (no shuffle, no global sort)."""
         with self._lock("append"):
-            self._restore_crashed_compact_locked()
+            # heal first: on a data dir missing mid-swap the append would
+            # start a fresh segment=0 and orphan every earlier row
+            _heal_dir(self._fs, self.data_path)
             # legacy delete files must be stamped BEFORE this append's
             # segment number exists, so the new segment clears their
             # watermark (re-append resurrects, J6)
@@ -472,7 +462,7 @@ class DocumentStore:
         """Soft delete (J6), sequenced: hides versions in segments written
         BEFORE this call; a later re-append of the same id is visible."""
         with self._lock("delete"):
-            self._restore_crashed_compact_locked()
+            _heal_dir(self._fs, self.data_path)
             self._migrate_legacy_deletes_locked()
             # watermark computed inside the lock — a stale read would
             # nondeterministically include/exclude a concurrent segment
@@ -550,7 +540,7 @@ class DocumentStore:
             keep = set()
         # APPEND the stamped copies, THEN remove the superseded files —
         # at no point does the deletes directory vanish or lose a delete
-        # (the two-rename swap compact() uses for the data dir would
+        # (the directory swap compact() uses for the data dir would
         # expose a no-deletes window to lock-free concurrent readers
         # here, and a crash mid-swap would silently resurrect every
         # deleted row). A lock-free reader whose in-flight scan raced
@@ -637,13 +627,10 @@ class DocumentStore:
         tiered: bool = False,
     ) -> None:
         """Rewrite all segments into one, applying deletes (hard delete) and
-        version dedup — the OPTIMIZE-style job (J4). Crash-safe ordering:
-        the old data directory is moved ASIDE before the compacted one
-        moves in, so every crash state keeps a full copy on disk; a
-        crash in the between-renames window (live dir momentarily
-        absent) is healed by the next write path's
-        :meth:`_restore_crashed_compact_locked`. Only the delete files
-        that were actually applied are removed.
+        version dedup — the OPTIMIZE-style job (J4). The rewrite installs
+        with :func:`_swap_dir` (crash states: module docstring), healed
+        by every write path at entry. Only the delete files that were
+        actually applied are removed.
 
         ``zorder_by`` (OPTIMIZE ZORDER): cluster the rewritten segment by
         the Morton interleave of the named non-negative integer columns
@@ -705,8 +692,8 @@ class DocumentStore:
         merged tail only (e.g. assign freshly-ingested rows into the
         EXISTING layout — pass the as-trained index, not a refreshed
         one, so tail and base agree); with fewer than two tail
-        segments this is a no-op. Crash recovery is journal-guided
-        (:func:`_tiered_swap`), healed by every write path at entry."""
+        segments this is a no-op. The merged tail installs with
+        :func:`_swap_dir`, the base segments as its ``keep`` entries."""
         bad = set(keep_layout_cols or []) - {"cluster_id", "codes"}
         if bad:
             # a typo here would silently drop the column the caller asked
@@ -716,7 +703,7 @@ class DocumentStore:
                 "set {'cluster_id', 'codes'}"
             )
         with self._lock("compact"):
-            self._restore_crashed_compact_locked()
+            _heal_dir(self._fs, self.data_path)
             if tiered:
                 self._compact_tiered_locked(
                     zorder_by=zorder_by, zorder_bits=zorder_bits,
@@ -730,10 +717,6 @@ class DocumentStore:
             keep_seg = segs[-1] if segs else 0
             merged = self.read().cache()
             n_rows = merged.count()  # materialize before touching sources
-            tmp = self.data_path + ".compacting"
-            old = self.data_path + ".old"
-            self._fs.delete(tmp)
-            self._fs.delete(old)
             # the compacted segment KEEPS the highest segment number:
             # pending deletes are sequenced by segment watermark, so
             # renumbering to 0 would make a mid-compaction delete hide
@@ -750,16 +733,12 @@ class DocumentStore:
                 recluster_vec_col=recluster_vec_col,
                 keep_layout_cols=keep_layout_cols,
             )
-            out.write.mode("overwrite").partitionBy("segment").parquet(tmp)
+            _swap_dir(
+                self._fs, self.data_path, [],
+                lambda tmp: out.write.mode("overwrite")
+                .partitionBy("segment").parquet(tmp),
+            )
             merged.unpersist()
-
-            if not self._fs.rename(self.data_path, old):
-                self._fs.delete(tmp)
-                raise OSError(f"compact: could not move {self.data_path} aside")
-            if not self._fs.rename(tmp, self.data_path):
-                self._fs.rename(old, self.data_path)  # roll back
-                raise OSError(f"compact: could not install {tmp}")
-            self._fs.delete(old)
             # drop only the deletes this compaction applied — a delete()
             # issued mid-compaction stays pending for the next
             # read/compaction (the lock blocks writers, so none can land
@@ -951,7 +930,7 @@ class DocumentStore:
             def _write_side(tmp: str) -> None:
                 union.write.mode("overwrite").partitionBy("segment").parquet(tmp)
 
-            _tiered_swap(self._fs, self.data_path, kept_dirs, _write_side)
+            _swap_dir(self._fs, self.data_path, kept_dirs, _write_side)
         finally:
             for o in cached:
                 o.unpersist()

@@ -1769,10 +1769,9 @@ def _bm25_index_step(
     retry on the stats read inside append (ADVICE r06).
 
     The crashed-compact heal runs BEFORE the route probe: a compact
-    that died between a table swap's two renames (e.g. the in-stream
-    tiered compact's stats swap) leaves stats unreadable with the
-    original in ``stats.old`` — without healing first, the probe would
-    route this healthy-after-restore index into the full build, which
+    that died mid-swap (e.g. the in-stream tiered compact's stats swap)
+    leaves stats absent — without healing first, the probe would
+    route this healthy-after-heal index into the full build, which
     ``mode(overwrite)``s every table with BATCH-ONLY content and
     silently drops all previously ingested documents from search. The
     heal takes the writer lock (``BM25.heal``): it renames directories,
@@ -1805,14 +1804,14 @@ def compact_sig_store(
     leave byte-duplicate rows — over a long stream the collision probe's
     file listing grows without bound (the same growth vector as the
     bm25 ingest state log). One ``distinct()`` rewrite collapses both,
-    installed with the move-aside-then-rename swap every other compactor
-    here uses (the row set is value-identical minus exact duplicates,
-    which the semi-join probe is insensitive to — any crash point leaves
-    a correct store). Crash heal at entry: a crash between the swap's
-    two renames leaves the live dir absent with the full history in
-    ``.old`` — without the restore, the next batch's collision probe
-    would see no store and silently re-admit historical near-duplicates
-    (ADVICE r07). Single-writer ENFORCED via the shared lock marker
+    installed with ``storage.store._swap_dir`` (the row set is
+    value-identical minus exact duplicates, which the semi-join probe is
+    insensitive to — any crash point leaves a correct store). Crash heal
+    at entry (``storage.store._heal_dir``; crash states: that module's
+    docstring): a crash mid-swap leaves the live dir absent — without
+    the heal, the next batch's collision probe would see no store and
+    silently re-admit historical near-duplicates (ADVICE r07).
+    Single-writer ENFORCED via the shared lock marker
     (sibling ``<store>._lock`` — inside the dir it would move aside with
     the swap): a second concurrent compactor fails fast with
     :class:`StoreLockedError` instead of silently deleting the other's
@@ -1825,11 +1824,11 @@ def compact_sig_store(
     restart would have its lock cleared and the enforcement voided.
     Returns True if a rewrite ran; ``min_files`` short-circuits when the
     store is already small."""
-    from comet_spark.storage.store import _FS, _writer_lock
+    from comet_spark.storage.store import _FS, _heal_dir, _swap_dir, _writer_lock
 
     fs = _FS(spark, sig_store_path)
     with _writer_lock(fs, f"{sig_store_path}._lock", "compact_sig_store"):
-        _heal_sig_store(fs, sig_store_path)
+        _heal_dir(fs, sig_store_path)
         if not _parquet_exists(spark, sig_store_path):
             return False
         names = [n for n in fs.listdir(sig_store_path) if not n.startswith(".")]
@@ -1837,30 +1836,12 @@ def compact_sig_store(
             return False
         df = spark.read.parquet(sig_store_path).distinct()
         n = df.count()
-        tmp = f"{sig_store_path}.compacting"
-        old = f"{sig_store_path}.old"
-        fs.delete(tmp)
-        fs.delete(old)
-        df.coalesce(max(1, -(-n // rows_per_file))).write.mode("overwrite").parquet(tmp)
-        if not fs.rename(sig_store_path, old):
-            fs.delete(tmp)
-            raise OSError(f"compact_sig_store: could not move {sig_store_path} aside")
-        if not fs.rename(tmp, sig_store_path):
-            fs.rename(old, sig_store_path)  # roll back
-            raise OSError(f"compact_sig_store: could not install {tmp}")
-        fs.delete(old)
+        _swap_dir(
+            fs, sig_store_path, [],
+            lambda tmp: df.coalesce(max(1, -(-n // rows_per_file)))
+            .write.mode("overwrite").parquet(tmp),
+        )
         return True
-
-
-def _heal_sig_store(fs, sig_store_path: str) -> None:
-    """Restore a signature store stranded mid-swap: live dir absent,
-    history in ``.old`` (crash between :func:`compact_sig_store`'s two
-    renames). Mirrors ``_restore_crashed_compact_locked`` — restore is a
-    single rename, so any crash point here re-heals identically. Callers
-    hold the sig-store writer lock."""
-    old = f"{sig_store_path}.old"
-    if not fs.exists(sig_store_path) and fs.exists(old):
-        fs.rename(old, sig_store_path)
 
 
 def _reject_legacy_flat_output(spark, out_path: str) -> None:
@@ -2057,11 +2038,11 @@ def bm25_ingest_stream(
       replay, so these probes cost nothing in steady state.
 
     The state log is read filtered to the current batch_id and is
-    COMPACTED (rewritten as its max-``done`` watermark row via a rename
-    swap) once it accumulates ``state_compact_files`` files (default
-    ~64 — lower it only if the per-batch listing ever matters before
-    then), so a long-running stream's
-    per-batch driver scan stays O(1) instead of growing with the
+    COMPACTED (rewritten as its max-``done`` watermark row via
+    ``storage.store._swap_dir``; every batch heals it at entry) once it
+    accumulates ``state_compact_files`` files (default ~64 — lower it
+    only if the per-batch listing ever matters before then), so a
+    long-running stream's per-batch driver scan stays O(1) instead of growing with the
     stream's lifetime; Spark replays at most the latest uncommitted
     batch, so older rows can never be consulted again. The log is
     scoped to ONE checkpoint lineage: pointing a fresh checkpoint at a
@@ -2115,7 +2096,7 @@ def bm25_ingest_stream(
     full compact, so re-inserting it later still fails fast (route
     upserts/resurrections through the LSM merge view); deletes of
     never-indexed ids are skipped, not errors."""
-    from comet_spark.storage.store import _FS
+    from comet_spark.storage.store import _FS, _heal_dir, _swap_dir
 
     state_path = f"{index_path}/_ingest_state"
     first = [True]  # only the first batch after a (re)start can be a replay
@@ -2145,8 +2126,9 @@ def bm25_ingest_stream(
 
     def _compact_state(spark) -> None:
         """Collapse the append-only log to its max-'done' watermark row
-        (rename swap — the only writer is this foreachBatch, and index
-        readers never touch the log). The watermark is computed with a
+        (``storage.store._swap_dir`` — the only writer is this
+        foreachBatch, which heals the log at entry, and index readers
+        never touch the log). The watermark is computed with a
         distributed agg and only rows AT/ABOVE it are collected (a
         healthy log keeps that to a handful of rows; even a
         pathologically-backlogged log can't balloon the driver with its
@@ -2167,17 +2149,12 @@ def bm25_ingest_stream(
             for r in rows
             if r["batch_id"] > max_done
         ]
-        tmp, old = f"{state_path}.compacting", f"{state_path}.old"
-        fs.delete(tmp)
-        fs.delete(old)
-        spark.createDataFrame(
-            keep, "batch_id bigint, phase string"
-        ).repartition(1).write.mode("overwrite").parquet(tmp)
-        if fs.rename(state_path, old) and fs.rename(tmp, state_path):
-            fs.delete(old)
-        else:  # roll back; a crash here at worst loses the log (probed)
-            fs.rename(old, state_path)
-            fs.delete(tmp)
+        _swap_dir(
+            fs, state_path, [],
+            lambda tmp: spark.createDataFrame(
+                keep, "batch_id bigint, phase string"
+            ).repartition(1).write.mode("overwrite").parquet(tmp),
+        )
 
     def _repair_index(spark, batch: DataFrame, batch_id: int, state: str) -> None:
         """Shared repair (committed → marker only; absent → O(batch)
@@ -2209,6 +2186,10 @@ def bm25_ingest_stream(
         if batch.isEmpty():
             return
         spark = batch.sparkSession
+        # a crash inside _compact_state's swap leaves the log absent or
+        # half-swapped; resolve it before _phases reads it, or a done
+        # batch would read as never started
+        _heal_dir(_FS(spark, state_path), state_path)
         dels: DataFrame | None = None
         if op_col is not None:
             # same loud-rejection contract as stream_into_store (and the
@@ -2255,7 +2236,7 @@ def bm25_ingest_stream(
             store.force_unlock()
             BM25.force_unlock(spark, index_path)
             # heal crashed compacts BEFORE the replay probes: an index
-            # between-renames crash state would otherwise classify as
+            # crashed mid-swap would otherwise classify as
             # no_index and pay a full rebuild (or worse: see
             # _bm25_index_step's docstring), and a store crashed inside
             # the in-stream tiered compact would stay unreadable
@@ -2263,7 +2244,7 @@ def bm25_ingest_stream(
             # 'done' marker without ever writing to the store
             BM25.heal(spark, index_path)
             with store._lock("heal"):
-                store._restore_crashed_compact_locked()
+                _heal_dir(store._fs, store.data_path)
         if ups_empty:
             # all-deletes batch: no insert side, so no state rows — a
             # replay simply re-applies (idempotent), nothing to probe
@@ -2794,18 +2775,19 @@ def neardup_ingest(
     bucketed by sig so the probe prunes. No all-pairs anything.
     """
     from comet_spark.operators.dedup import minhash_band_signatures
-    from comet_spark.storage.store import _FS, _writer_lock
+    from comet_spark.storage.store import _FS, _heal_dir, _writer_lock
 
     spark = batch.sparkSession
-    # heal a store stranded mid-compact-swap (live dir absent, history in
-    # .old) BEFORE the collision probe: without the restore the probe sees
-    # no store and silently re-admits historical near-duplicates (ADVICE
-    # r07). Lock held for the rename only — a concurrent compactor holding
-    # it fails this batch fast instead of racing the swap.
+    # heal a store stranded mid-compact-swap (live dir absent) BEFORE
+    # the collision probe: without the heal the probe sees no store and
+    # silently re-admits historical near-duplicates (ADVICE r07). The
+    # lock is taken only when the store is absent (a crashed swap, or
+    # the very first batch) — a concurrent compactor holding it fails
+    # this batch fast instead of racing the swap.
     fs = _FS(spark, sig_store_path)
-    if not fs.exists(sig_store_path) and fs.exists(f"{sig_store_path}.old"):
+    if not fs.exists(sig_store_path):
         with _writer_lock(fs, f"{sig_store_path}._lock", "neardup_ingest heal"):
-            _heal_sig_store(fs, sig_store_path)
+            _heal_dir(fs, sig_store_path)
     sigs = minhash_band_signatures(
         batch, id_col=id_col, text_col=text_col, n=n, n_hashes=n_hashes,
         bands=bands,

@@ -11,6 +11,7 @@ from comet_spark.operators.knn import knn, knn_aggregate
 from comet_spark.operators.metadata import (
     Between, Eq, Exists, Field, Gt, In, Ne, Not, NotExists, NotIn, NumField, Where,
 )
+from tests.conftest import rename_crash_points
 
 
 @pytest.fixture(scope="module")
@@ -341,6 +342,46 @@ def test_bm25_append_matches_full_rebuild(spark, tmp_path):
         os.remove(f)
     with pytest.raises(ValueError, match="total_dl"):
         BM25.append(spark, old, tail)
+
+
+def test_bm25_append_rejects_corrupt_meta(spark, tmp_path):
+    """Only a MISSING ``meta`` (an index older than it) reads as
+    unbucketed. A damaged one must fail the append before it writes:
+    read as "0 buckets", append would land bucket-less part files in the
+    bucketed postings, which the tiered merge later rejects."""
+    import glob
+    import os
+
+    from comet_spark.operators.bm25 import BM25
+
+    docs = spark.createDataFrame(
+        [(1, "spark joins tables"), (2, "spark streams data")],
+        "id bigint, text string",
+    )
+    path = str(tmp_path / "corrupt_meta")
+    BM25(docs).write(path, buckets=4)
+    for f in glob.glob(f"{path}/meta/*"):
+        if f.endswith(".parquet"):
+            with open(f, "wb") as fh:
+                fh.write(b"not a parquet file")
+        elif f.endswith(".crc"):
+            os.remove(f)
+    for f in glob.glob(f"{path}/meta/.*.crc"):
+        os.remove(f)
+
+    def _postings():
+        return {
+            (os.path.basename(f), os.path.getsize(f))
+            for f in glob.glob(f"{path}/postings/*")
+        }
+
+    before = _postings()
+    with pytest.raises(Exception):
+        BM25.append(
+            spark, path,
+            spark.createDataFrame([(3, "fast spark scans")], "id bigint, text string"),
+        )
+    assert _postings() == before
 
 
 def test_bm25_index_writer_lock(spark, tmp_path):
@@ -1471,7 +1512,6 @@ def test_bm25_tiered_compact_crash_sweep(spark, tmp_path):
     fresh full-corpus build, with no leftover side dirs or journals."""
     import pyspark.sql.functions as F
 
-    import comet_spark.storage.store as store_mod
     from comet_spark.operators.bm25 import BM25, _postings_table_name
 
     # base must be top-tier vs the appends so the tiered merge actually
@@ -1497,32 +1537,12 @@ def test_bm25_tiered_compact_crash_sweep(spark, tmp_path):
     )
     BM25.append(spark, seed, full.filter(F.col("id") > 608))
 
-    real_rename = store_mod._FS.rename
-    k = 0
-    completed_clean = False
-    while not completed_clean:
-        k += 1
-        assert k < 40, "crash sweep did not terminate"
+    for k, crash in rename_crash_points(limit=40):
         path = str(tmp_path / f"sweep{k}")
         shutil.copytree(seed, path)
 
-        calls = {"n": 0}
-
-        def inject(self, src, dst, _k=k, _calls=calls):
-            ok = real_rename(self, src, dst)
-            _calls["n"] += 1
-            if _calls["n"] == _k:
-                raise RuntimeError("injected crash")
-            return ok
-
-        store_mod._FS.rename = inject
-        try:
+        with crash:
             BM25.compact(spark, path, tiered=True)
-            completed_clean = True  # K exceeded the protocol's renames
-        except RuntimeError:
-            pass
-        finally:
-            store_mod._FS.rename = real_rename
 
         # heal + complete on re-run (every write path heals at entry)
         BM25.compact(spark, path, tiered=True)
@@ -1571,7 +1591,6 @@ def test_bm25_full_compact_crash_sweep(spark, tmp_path):
     doc_len/postings heal test to the whole protocol."""
     import pyspark.sql.functions as F
 
-    import comet_spark.storage.store as store_mod
     from comet_spark.operators.bm25 import BM25, _postings_table_name
 
     full = spark.createDataFrame(
@@ -1587,32 +1606,12 @@ def test_bm25_full_compact_crash_sweep(spark, tmp_path):
     BM25(full.filter(F.col("id") <= 18)).write(seed, buckets=4)
     BM25.append(spark, seed, full.filter(F.col("id") > 18))
 
-    real_rename = store_mod._FS.rename
-    k = 0
-    completed_clean = False
-    while not completed_clean:
-        k += 1
-        assert k < 16, "crash sweep did not terminate"
+    for k, crash in rename_crash_points(limit=16):
         path = str(tmp_path / f"fullsweep{k}")
         shutil.copytree(seed, path)
 
-        calls = {"n": 0}
-
-        def inject(self, src, dst, _k=k, _calls=calls):
-            ok = real_rename(self, src, dst)
-            _calls["n"] += 1
-            if _calls["n"] == _k:
-                raise RuntimeError("injected crash")
-            return ok
-
-        store_mod._FS.rename = inject
-        try:
+        with crash:
             BM25.compact(spark, path)
-            completed_clean = True
-        except RuntimeError:
-            pass
-        finally:
-            store_mod._FS.rename = real_rename
 
         BM25.compact(spark, path)  # heal + complete
         from comet_spark.storage.store import _FS
@@ -1738,7 +1737,6 @@ def test_bm25_delete_compact_crash_sweep(spark, tmp_path):
     finding #1: the stale-stats read and the bricked re-run)."""
     import pyspark.sql.functions as F
 
-    import comet_spark.storage.store as store_mod
     from comet_spark.operators.bm25 import BM25, _postings_table_name
 
     full = spark.createDataFrame(
@@ -1761,32 +1759,12 @@ def test_bm25_delete_compact_crash_sweep(spark, tmp_path):
     BM25.append(spark, seed, full.filter(F.col("id") > 18))
     assert BM25.delete(spark, seed, deleted) == len(deleted)
 
-    real_rename = store_mod._FS.rename
-    k = 0
-    completed_clean = False
-    while not completed_clean:
-        k += 1
-        assert k < 16, "crash sweep did not terminate"
+    for k, crash in rename_crash_points(limit=16):
         path = str(tmp_path / f"delsweep{k}")
         shutil.copytree(seed, path)
 
-        calls = {"n": 0}
-
-        def inject(self, src, dst, _k=k, _calls=calls):
-            ok = real_rename(self, src, dst)
-            _calls["n"] += 1
-            if _calls["n"] == _k:
-                raise RuntimeError("injected crash")
-            return ok
-
-        store_mod._FS.rename = inject
-        try:
+        with crash:
             BM25.compact(spark, path)
-            completed_clean = True
-        except RuntimeError:
-            pass
-        finally:
-            store_mod._FS.rename = real_rename
 
         # (a) the crashed MIXED state either fails LOUDLY (between a
         # swap's two renames the live dir is absent — the documented

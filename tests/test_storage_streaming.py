@@ -12,6 +12,7 @@ from comet_spark.multimodal import (
 )
 from comet_spark.storage.store import DocumentStore
 from comet_spark.streaming.ingest import stream_into_store, windowed_event_counts
+from tests.conftest import rename_crash_points
 
 
 @pytest.fixture()
@@ -1181,6 +1182,111 @@ def test_compact_sig_store_writer_lock(spark, tmp_path):
     assert not fs.exists(store + "._lock")
 
 
+def test_compact_sig_store_crash_sweep(spark, tmp_path):
+    """Every rename crash point of compact_sig_store's swap heals: inject
+    a crash after the K-th rename, re-run the compactor (it heals at
+    entry), require no swap leftovers and the same signature rows."""
+    import os
+    import shutil
+
+    from comet_spark.streaming.ingest import compact_sig_store, neardup_ingest
+
+    seed = str(tmp_path / "sigs_seed")
+    for i, text in enumerate(["alpha beta gamma delta epsilon zeta eta",
+                              "one two three four five six seven eight"]):
+        neardup_ingest(_neardup_docs(spark, [(i, text)]), seed)
+    want = {tuple(r) for r in spark.read.parquet(seed).collect()}
+
+    for k, crash in rename_crash_points(limit=8):
+        path = str(tmp_path / f"sigs_sweep{k}")
+        shutil.copytree(seed, path)
+        with crash:
+            compact_sig_store(spark, path, min_files=0)
+
+        assert compact_sig_store(spark, path, min_files=0), k  # heal + rerun
+        for suf in (".old", ".compacting", ".tiermove", "._lock"):
+            assert not os.path.exists(path + suf), (k, suf)
+        assert {tuple(r) for r in spark.read.parquet(path).collect()} == want, k
+
+
+@pytest.mark.parametrize("entry", ["compact_sig_store", "neardup_ingest"])
+def test_sig_store_heal_raises_when_restore_fails(spark, tmp_path, monkeypatch, entry):
+    """A heal whose restore rename fails must raise, not carry on with
+    the signature store missing (the collision probe would then see no
+    history and re-admit every near-duplicate)."""
+    import comet_spark.storage.store as store_mod
+    from comet_spark.streaming.ingest import compact_sig_store, neardup_ingest
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    store = str(tmp_path / "sigs_rf")
+    neardup_ingest(_neardup_docs(spark, [(1, base)]), store)
+    fs = store_mod._FS(spark, store)
+    assert fs.rename(store, store + ".old")  # crashed mid-swap
+    monkeypatch.setattr(store_mod._FS, "rename", lambda self, src, dst: False)
+    with pytest.raises(OSError):
+        if entry == "compact_sig_store":
+            compact_sig_store(spark, store, min_files=0)
+        else:
+            neardup_ingest(_neardup_docs(spark, [(9, base)]), store)
+    assert fs.exists(store + ".old") and not fs.exists(store)
+
+
+def test_bm25_ingest_state_compaction_crash_sweep(spark, tmp_path):
+    """Every rename crash point of the state log's compaction (it runs
+    after a batch's 'done' marker) heals: the crashed micro-batch
+    replays on restart, heals the log before reading it, and finds its
+    batch done — no swap leftovers, the log still records the batch,
+    and store and index hold every document exactly once."""
+    import os
+    import shutil
+
+    from comet_spark.operators.bm25 import BM25
+    from comet_spark.streaming.ingest import bm25_ingest_stream
+
+    src = str(tmp_path / "sc_src")
+    rows0 = [(i, f"spark state doc {i}") for i in range(1, 11)]
+    rows1 = [(i, f"spark log doc {i}") for i in range(100, 106)]
+    schema = "id bigint, text string"
+
+    def run(k: str) -> None:
+        q = bm25_ingest_stream(
+            spark.readStream.schema(schema).parquet(src),
+            DocumentStore(spark, str(tmp_path / f"sc_store{k}")),
+            str(tmp_path / f"sc_ix{k}"),
+            checkpoint=str(tmp_path / f"sc_ckpt{k}"),
+            buckets=0, state_compact_files=2,
+        )
+        q.awaitTermination(120)
+
+    _batch(spark, rows0).coalesce(1).write.mode("append").parquet(src)
+    run("_seed")  # batch 0
+    # batch 1's 'begin' + 'done' rows take the log past the bound, so it
+    # compacts after 'done'
+    _batch(spark, rows1).coalesce(1).write.mode("append").parquet(src)
+    want = [
+        tuple(r) for r in BM25(_batch(spark, rows0 + rows1))
+        .score("spark doc", k=0).collect()
+    ]
+
+    for k, crash in rename_crash_points(limit=8):
+        for d in ("sc_store", "sc_ix", "sc_ckpt"):
+            shutil.copytree(tmp_path / f"{d}_seed", tmp_path / f"{d}{k}")
+        with crash:
+            run(str(k))
+
+        run(str(k))  # restart: the crashed batch replays and heals
+        state = str(tmp_path / f"sc_ix{k}" / "_ingest_state")
+        for suf in (".old", ".compacting", ".tiermove"):
+            assert not os.path.exists(state + suf), (k, suf)
+        done = spark.read.parquet(state).filter("phase = 'done'")
+        assert done.agg({"batch_id": "max"}).first()[0] == 1, k
+        store = DocumentStore(spark, str(tmp_path / f"sc_store{k}"))
+        assert store.read().count() == len(rows0) + len(rows1), k
+        live = BM25.read(spark, str(tmp_path / f"sc_ix{k}"))
+        assert live.doc_len.count() == len(rows0) + len(rows1), k
+        assert [tuple(r) for r in live.score("spark doc", k=0).collect()] == want, k
+
+
 def test_store_compact_zorder(spark, tmp_path):
     """OPTIMIZE ZORDER on compaction: results identical, and within each
     written file the Z-key range is bounded (files are clustered — the
@@ -1605,14 +1711,8 @@ def test_store_tiered_compact_crash_sweep(spark, tmp_path):
     """Every rename crash point in the store's tiered swap heals: inject
     a crash after the K-th rename, then require compact(tiered=True)
     (which heals at entry) to converge to the correct merged view."""
-    import comet_spark.storage.store as store_mod
 
-    real_rename = store_mod._FS.rename
-    k = 0
-    completed_clean = False
-    while not completed_clean:
-        k += 1
-        assert k < 20, "crash sweep did not terminate"
+    for k, crash in rename_crash_points(limit=20):
         store = DocumentStore(spark, str(tmp_path / f"tsweep{k}"))
         store.append(
             spark.createDataFrame(
@@ -1624,23 +1724,8 @@ def test_store_tiered_compact_crash_sweep(spark, tmp_path):
         store.append(_batch(spark, [(9101, "n2")]))
         want = {(r["id"], r["text"]) for r in store.read().collect()}
 
-        calls = {"n": 0}
-
-        def inject(self, src, dst, _k=k, _calls=calls):
-            ok = real_rename(self, src, dst)
-            _calls["n"] += 1
-            if _calls["n"] == _k:
-                raise RuntimeError("injected crash")
-            return ok
-
-        store_mod._FS.rename = inject
-        try:
+        with crash:
             store.compact(tiered=True)
-            completed_clean = True
-        except RuntimeError:
-            pass
-        finally:
-            store_mod._FS.rename = real_rename
 
         store.compact(tiered=True)  # heal + complete
         assert store._segment_ids() == [0, 2], k
@@ -1757,7 +1842,6 @@ def test_store_tiered_ladder_crash_sweep(spark, monkeypatch, tmp_path):
     exact merged view and no protocol leftovers."""
     import shutil
 
-    import comet_spark.storage.store as store_mod
 
     # the 12-segment pre-compact store is deterministic — build it ONCE
     # and copy the directory per crash point (the per-k rebuild was the
@@ -1767,33 +1851,13 @@ def test_store_tiered_ladder_crash_sweep(spark, monkeypatch, tmp_path):
     seed = _ladder_store(spark, monkeypatch, seed_path)
     want = {(r["id"], r["text"]) for r in seed.read().collect()}
 
-    real_rename = store_mod._FS.rename
-    k = 0
-    completed_clean = False
-    while not completed_clean:
-        k += 1
-        assert k < 40, "crash sweep did not terminate"
+    for k, crash in rename_crash_points(limit=40):
         path = str(tmp_path / f"lsw{k}")
         shutil.copytree(seed_path, path)
         store = DocumentStore(spark, path)
 
-        calls = {"n": 0}
-
-        def inject(self, src, dst, _k=k, _calls=calls):
-            ok = real_rename(self, src, dst)
-            _calls["n"] += 1
-            if _calls["n"] == _k:
-                raise RuntimeError("injected crash")
-            return ok
-
-        store_mod._FS.rename = inject
-        try:
+        with crash:
             store.compact(tiered=True)
-            completed_clean = True
-        except RuntimeError:
-            pass
-        finally:
-            store_mod._FS.rename = real_rename
 
         store.compact(tiered=True)  # heal + complete
         assert store._segment_ids() == [0, 4, 5, 11], k
@@ -2048,14 +2112,8 @@ def test_store_full_compact_crash_sweep(spark, tmp_path):
     heals on re-run (the tiered path has its own sweep; this drives the
     plain move-aside-then-install protocol the same way), including
     with pending deletes applied mid-flight."""
-    import comet_spark.storage.store as store_mod
 
-    real_rename = store_mod._FS.rename
-    k = 0
-    completed_clean = False
-    while not completed_clean:
-        k += 1
-        assert k < 12, "crash sweep did not terminate"
+    for k, crash in rename_crash_points(limit=12):
         store = DocumentStore(spark, str(tmp_path / f"fsweep{k}"))
         store.append(_batch(spark, [(1, "a"), (2, "b"), (3, "c")]))
         store.append(_batch(spark, [(2, "b2"), (4, "d")]))
@@ -2063,23 +2121,8 @@ def test_store_full_compact_crash_sweep(spark, tmp_path):
         want = {(r["id"], r["text"]) for r in store.read().collect()}
         assert want == {(1, "a"), (2, "b2"), (4, "d")}
 
-        calls = {"n": 0}
-
-        def inject(self, src, dst, _k=k, _calls=calls):
-            ok = real_rename(self, src, dst)
-            _calls["n"] += 1
-            if _calls["n"] == _k:
-                raise RuntimeError("injected crash")
-            return ok
-
-        store_mod._FS.rename = inject
-        try:
+        with crash:
             store.compact()
-            completed_clean = True
-        except RuntimeError:
-            pass
-        finally:
-            store_mod._FS.rename = real_rename
 
         store.compact()  # heal + complete
         for suf in (".old", ".compacting"):
