@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from comet_spark.functions.vector import to_double_array
 from comet_spark.operators.topk import topk
+from comet_spark.session import local_frame
 from comet_spark.training.kmeans import assign_clusters, kmeans_train
 
 __all__ = ["IVFIndex", "PQIndex", "IVFPQIndex"]
@@ -105,10 +106,10 @@ class IVFIndex:
         rows = [
             (int(i), [float(x) for x in c]) for i, c in enumerate(self.centroids)
         ]
-        spark.createDataFrame(
-            rows, "cluster_id bigint, centroid array<double>"
+        local_frame(
+            spark, rows, "cluster_id bigint, centroid array<double>"
         ).repartition(1).write.mode("overwrite").parquet(f"{path}/centroids.parquet")
-        spark.createDataFrame([(self.metric,)], "metric string").repartition(
+        local_frame(spark, [(self.metric,)], "metric string").repartition(
             1
         ).write.mode("overwrite").parquet(f"{path}/meta.parquet")
 
@@ -243,8 +244,8 @@ class IVFIndex:
             n_q = nprobe.get(r["qid"], 1) if isinstance(nprobe, dict) else nprobe
             for cid in self.probe_lists(np.asarray(qv), n_q):
                 probe_rows.append((r["qid"], cid, qv))
-        probes = spark.createDataFrame(
-            probe_rows, "qid bigint, cluster_id bigint, qv array<double>"
+        probes = local_frame(
+            spark, probe_rows, "qid bigint, cluster_id bigint, qv array<double>"
         )
 
         cand = assigned.join(F.broadcast(probes), "cluster_id")
@@ -324,8 +325,8 @@ class PQIndex:
             for sub in range(self.m)
             for code in range(self.ksub)
         ]
-        spark.createDataFrame(
-            rows, "sub int, code int, centroid array<double>"
+        local_frame(
+            spark, rows, "sub int, code int, centroid array<double>"
         ).repartition(1).write.mode("overwrite").parquet(f"{path}/codebooks.parquet")
 
     @classmethod
@@ -484,7 +485,7 @@ class PQIndex:
                 for sub in range(self.m)
                 for code in range(self.ksub)
             )
-        luts = spark.createDataFrame(lut_rows, "qid bigint, sub int, code int, dist double")
+        luts = local_frame(spark, lut_rows, "qid bigint, sub int, code int, dist double")
         exploded = codes.select(
             "id", F.posexplode("codes").alias("sub", "code")
         ).select("id", F.col("sub").cast("int"), F.col("code").cast("int"))
@@ -660,8 +661,8 @@ class IVFPQIndex:
             (int(cid), [[float(x) for x in row] for row in self.pq.lut(q - self.ivf.centroids[cid])])
             for cid in probed
         ]
-        luts = spark.createDataFrame(
-            lut_rows, "cluster_id bigint, lut array<array<double>>"
+        luts = local_frame(
+            spark, lut_rows, "cluster_id bigint, lut array<array<double>>"
         )
         terms = [
             F.element_at(
@@ -702,7 +703,7 @@ def _residuals(assigned: DataFrame, centroids: np.ndarray, *, vec_col: str = "ve
     """residual = v − centroid[cluster_id] (``ivfpq_index.go:216-226``)."""
     spark = assigned.sparkSession
     cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)]
-    cents = spark.createDataFrame(cent_rows, "cluster_id bigint, centroid array<double>")
+    cents = local_frame(spark, cent_rows, "cluster_id bigint, centroid array<double>")
     return (
         assigned.join(F.broadcast(cents), "cluster_id")
         .withColumn(

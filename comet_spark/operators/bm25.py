@@ -28,14 +28,18 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from comet_spark.functions.text import ensure_nfkc, needs_unicode_tokenize, tokenize
+from comet_spark.functions.text import tokenize
 from comet_spark.functions.uax29 import tokenize_unicode_py
 from comet_spark.operators.topk import topk
+from comet_spark.session import local_frame
 
 __all__ = ["BM25", "DuplicateIdsError", "K1", "B", "tokenize_py"]
 
 K1 = 1.2
 B = 0.75
+
+_META_SCHEMA = "buckets int"
+_STATS_SCHEMA = "n_docs double, avgdl double, total_dl double"
 
 
 class DuplicateIdsError(ValueError):
@@ -104,7 +108,9 @@ def _meta_buckets(spark, fs, path: str) -> int:
     ``postings``."""
     if not fs.exists(f"{path}/meta"):
         return 0
-    return int(spark.read.parquet(f"{path}/meta").first()["buckets"])
+    # the schema is known: reading with it skips the inference job
+    meta = spark.read.schema(_META_SCHEMA).parquet(f"{path}/meta").first()
+    return int(meta["buckets"])
 
 
 def _heal_tables(fs, path: str) -> None:
@@ -244,12 +250,39 @@ def _token_table(
     """(id, term) exploded token table of a corpus — the shared front of
     the index BUILD and the incremental APPEND paths, so the per-row
     tokenizer routing exists exactly once."""
+    from comet_spark.functions.text import NONNATIVE_TOKEN_RE, nfkc, tokenize_unicode
+
     # write-time NFKC (reference bm25_index.go:153-156): the index
     # build normalizes once, so scoring stays native on any corpus.
     # ASCII corpora pass through with zero added cost (one probe
     # scan); normalize=False opts out when the caller guarantees
     # already-normalized AND non-ideographic input.
-    if normalize and needs_unicode_tokenize(docs, text_col):
+    text = F.col(text_col)
+    is_nonnative = F.coalesce(text.rlike(NONNATIVE_TOKEN_RE), F.lit(False))
+    nonnative = non_ascii = False
+    if normalize:
+        # ONE probe scan yields both routing flags: does any row need the
+        # reference-exact Arrow tokenizer (functions.text.
+        # needs_unicode_tokenize), and does any row left on the native
+        # path carry non-ASCII text, i.e. need the NFKC pass
+        # (has_non_ascii, as ensure_nfkc applies it to those rows)
+        flags = docs.agg(
+            F.max(is_nonnative).alias("nonnative"),
+            F.max(
+                F.coalesce(text.rlike("[^\\x00-\\x7F]"), F.lit(False))
+                & ~is_nonnative
+            ).alias("non_ascii"),
+        ).first()
+        nonnative, non_ascii = bool(flags["nonnative"]), bool(flags["non_ascii"])
+
+    def _native(rows: DataFrame) -> DataFrame:
+        if non_ascii:
+            rows = rows.withColumn(text_col, nfkc(text_col))
+        return rows.select(
+            F.col(id_col).alias("id"), F.explode(tokenize(text_col)).alias("term")
+        )
+
+    if nonnative:
         # Rows the native tokenizer cannot segment per UAX#29 —
         # ideographic scripts (Han/Hiragana split char-by-char per
         # WB999 while the native regex concatenates letter runs),
@@ -271,29 +304,12 @@ def _token_table(
         # members (see functions/text.py). The union costs a second
         # scan of the corpus, but the native leg's filter is pushed
         # to the scan and the Arrow leg reads only its rows.
-        from comet_spark.functions.text import (
-            NONNATIVE_TOKEN_RE,
-            tokenize_unicode,
-        )
-
-        is_nonnative = F.coalesce(
-            F.col(text_col).rlike(NONNATIVE_TOKEN_RE), F.lit(False)
-        )
         arrow_toks = docs.filter(is_nonnative).select(
             F.col(id_col).alias("id"),
             F.explode(tokenize_unicode(text_col)).alias("term"),
         )
-        rest = ensure_nfkc(docs.filter(~is_nonnative), text_col)
-        rest_toks = rest.select(
-            F.col(id_col).alias("id"),
-            F.explode(tokenize(text_col)).alias("term"),
-        )
-        return arrow_toks.unionByName(rest_toks)
-    if normalize:
-        docs = ensure_nfkc(docs, text_col)
-    return docs.select(
-        F.col(id_col).alias("id"), F.explode(tokenize(text_col)).alias("term")
-    )
+        return arrow_toks.unionByName(_native(docs.filter(~is_nonnative)))
+    return _native(docs)
 
 
 class BM25:
@@ -302,17 +318,29 @@ class BM25:
     ``cache=True`` persists the postings/doc-stats (the 'index build'):
     right when several queries hit the same corpus — exactly the situation
     the reference's in-memory inverted index optimizes for.
+
+    ``checkpoint=True`` instead computes the postings once, eagerly
+    (``localCheckpoint``), and leaves the derived tables lazy over them:
+    the shape for a one-shot write such as :meth:`append`'s segment.
+    Unlike a cached plan, whose partitioning stays pinned at
+    ``spark.sql.shuffle.partitions``, the checkpoint keeps the partition
+    count AQE chose, so each table's write is sized by its data (one
+    part file for a small batch instead of one per shuffle partition).
     """
 
     def __init__(
         self, docs: DataFrame, *, id_col: str = "id", text_col: str = "text",
-        cache: bool = False, normalize: bool = True,
+        cache: bool = False, normalize: bool = True, checkpoint: bool = False,
     ):
+        if cache and checkpoint:
+            raise ValueError("BM25: cache and checkpoint are exclusive")
         toks = _token_table(docs, id_col, text_col, normalize)
         # tf per (doc, term); doc length per doc
         self.postings = toks.groupBy("id", "term").agg(F.count("*").alias("tf"))
         if cache:
             self.postings = self.postings.cache()
+        elif checkpoint:
+            self.postings = self.postings.localCheckpoint()
         # doc length derives FROM the postings (sum of tfs == token count),
         # not from the raw toks plan: with cache=True every downstream
         # consumer then reads the cached table instead of re-tokenizing
@@ -387,7 +415,7 @@ class BM25:
                 )
             else:
                 self.postings.write.mode("overwrite").parquet(f"{path}/postings")
-            spark.createDataFrame([(int(buckets),)], "buckets int").repartition(
+            local_frame(spark, [(int(buckets),)], _META_SCHEMA).repartition(
                 1
             ).write.mode("overwrite").parquet(f"{path}/meta")
             self.doc_len.write.mode("overwrite").parquet(f"{path}/doc_len")
@@ -474,9 +502,8 @@ class BM25:
             ix.df = ix.df.groupBy("term").agg(F.sum("df").alias("df"))
             n = float(sum(r["n_docs"] for r in segs))
             tdl = float(sum(r["total_dl"] or 0.0 for r in segs))
-            ix.stats = spark.createDataFrame(
-                [(n, tdl / n if n else None, tdl)],
-                "n_docs double, avgdl double, total_dl double",
+            ix.stats = local_frame(
+                spark, [(n, tdl / n if n else None, tdl)], _STATS_SCHEMA
             )
         ix.del_ids = None
         # Delete vector (:meth:`delete`): with a vector present, every
@@ -501,9 +528,8 @@ class BM25:
                 F.count("*").alias("n"), F.sum("dl").alias("s")
             ).first()
             n2, tdl2 = float(live["n"]), float(live["s"] or 0.0)
-            ix.stats = spark.createDataFrame(
-                [(n2, tdl2 / n2 if n2 else None, tdl2)],
-                "n_docs double, avgdl double, total_dl double",
+            ix.stats = local_frame(
+                spark, [(n2, tdl2 / n2 if n2 else None, tdl2)], _STATS_SCHEMA
             )
         return ix
 
@@ -522,8 +548,13 @@ class BM25:
         """Incrementally extend a persisted index with NEW documents —
         J-family index maintenance for the text side, matching the ANN
         layouts' refresh/compact story. Only the appended batch is
-        tokenized; its postings/doc_len land as extra segment files and
-        df/stats gain one per-segment partial each. Nothing on disk is
+        tokenized — in one pass: its postings are materialized once
+        (``checkpoint=True``) and doc_len/df/stats derive from them — and
+        its postings/doc_len land as extra segment files while df/stats
+        gain one per-segment partial each. Each write is sized by AQE
+        for the batch's data, so a small batch adds one part file per
+        table (not one per shuffle partition for the fresh reads and the
+        compaction to scan). Nothing on disk is
         read back or rewritten, so the maintenance cost is O(batch)
         rather than the full-corpus re-tokenize + (id, term) shuffle a
         rebuild pays — the same reason the reference mutates its
@@ -585,44 +616,42 @@ class BM25:
                         "appended documents must be new (route upserts "
                         "through the LSM merge view instead)"
                     )
-            # cache=True: doc_len/df/stats all derive from seg.postings —
-            # the cache keeps the batch's tokenize+aggregate to ONE
-            # evaluation across the four segment writes
+            # checkpoint=True: the batch is tokenized and aggregated ONCE
+            # (doc_len/df/stats all derive from the materialized
+            # postings), and every write keeps the partitioning AQE
+            # picks for its data — one part file per table for a small
+            # batch (a cached plan would pin shuffle.partitions files)
             seg = cls(
                 new_docs, id_col=id_col, text_col=text_col,
-                normalize=normalize, cache=True,
+                normalize=normalize, checkpoint=True,
             )
-            try:
-                # doc_len FIRST: it is the id ledger the duplicate-id
-                # probe reads, so any retry of a crash landing after this
-                # point fail-fasts instead of double-counting postings
-                seg.doc_len.write.mode("append").parquet(f"{path}/doc_len")
-                if buckets > 0:
-                    # mode=append honors (or, in a fresh session where
-                    # the catalog forgot the table, re-creates) the
-                    # bucket spec; the pre-existing files under
-                    # path/postings stay table data
-                    (
-                        seg.postings.write.mode("append")
-                        .option("path", f"{path}/postings")
-                        .bucketBy(buckets, "term")
-                        .sortBy("term")
-                        .saveAsTable(_postings_table_name(path))
-                    )
-                else:
-                    seg.postings.write.mode("append").parquet(f"{path}/postings")
-                # df AFTER postings: a df partial without its postings
-                # would inflate idf for terms existing docs already
-                # carry; this way a torn state only under-scores the
-                # (unfinished) batch
-                seg.df.write.mode("append").parquet(f"{path}/df")
-                # stats LAST: the segment's commit record
-                seg.stats.repartition(1).write.mode("append").parquet(
-                    f"{path}/stats"
+            # doc_len FIRST: it is the id ledger the duplicate-id
+            # probe reads, so any retry of a crash landing after this
+            # point fail-fasts instead of double-counting postings
+            seg.doc_len.write.mode("append").parquet(f"{path}/doc_len")
+            if buckets > 0:
+                # mode=append honors (or, in a fresh session where
+                # the catalog forgot the table, re-creates) the
+                # bucket spec; the pre-existing files under
+                # path/postings stay table data
+                (
+                    seg.postings.write.mode("append")
+                    .option("path", f"{path}/postings")
+                    .bucketBy(buckets, "term")
+                    .sortBy("term")
+                    .saveAsTable(_postings_table_name(path))
                 )
-            finally:
-                for t in (seg.postings, seg.doc_len, seg.df, seg.stats):
-                    t.unpersist()
+            else:
+                seg.postings.write.mode("append").parquet(f"{path}/postings")
+            # df AFTER postings: a df partial without its postings
+            # would inflate idf for terms existing docs already
+            # carry; this way a torn state only under-scores the
+            # (unfinished) batch
+            seg.df.write.mode("append").parquet(f"{path}/df")
+            # stats LAST: the segment's commit record
+            seg.stats.repartition(1).write.mode("append").parquet(
+                f"{path}/stats"
+            )
 
     @classmethod
     def delete(cls, spark, path: str, ids, *, id_col: str = "id") -> int:
@@ -674,7 +703,7 @@ class BM25:
         if isinstance(ids, DataFrame):
             ids_df = ids.select(F.col(id_col).alias("id"))
         else:
-            ids_df = spark.createDataFrame([(int(i),) for i in ids], "id bigint")
+            ids_df = local_frame(spark, [(int(i),) for i in ids], "id bigint")
         fs = _FS(spark, path)
         with _index_writer_lock(spark, path, "delete"):
             _heal_tables(fs, path)
@@ -873,9 +902,9 @@ class BM25:
                         F.count("*").alias("n"), F.sum("dl").alias("s")
                     ).first()
                     n2, tdl2 = float(r["n"]), float(r["s"] or 0.0)
-                    merged = spark.createDataFrame(
-                        [(n2, tdl2 / n2 if n2 else None, tdl2)],
-                        "n_docs double, avgdl double, total_dl double",
+                    merged = local_frame(
+                        spark, [(n2, tdl2 / n2 if n2 else None, tdl2)],
+                        _STATS_SCHEMA,
                     )
                     _swap(
                         "stats",
@@ -891,9 +920,9 @@ class BM25:
                 )
                 if len(stats_rows) > 1:
                     tdl = float(sum(r["total_dl"] for r in stats_rows))
-                    merged = spark.createDataFrame(
-                        [(n_docs, tdl / n_docs if n_docs else None, tdl)],
-                        "n_docs double, avgdl double, total_dl double",
+                    merged = local_frame(
+                        spark, [(n_docs, tdl / n_docs if n_docs else None, tdl)],
+                        _STATS_SCHEMA,
                     )
                 else:
                     # single segment: stats pass through unchanged
@@ -901,7 +930,7 @@ class BM25:
                     # read of the dir mid-swap and keeps whatever schema
                     # the index carries)
                     cur = spark.read.parquet(f"{path}/stats")
-                    merged = spark.createDataFrame(stats_rows, cur.schema)
+                    merged = local_frame(spark, stats_rows, cur.schema)
                 _swap(
                     "stats",
                     lambda t: merged.repartition(1)

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from comet_spark.functions.vector import to_double_array
 from comet_spark.operators.topk import topk
+from comet_spark.session import local_frame
 
 __all__ = ["HNSWIndex", "DistributedHNSW"]
 
@@ -252,19 +253,19 @@ class HNSWIndex:
             (int(self.ids[i]), [float(x) for x in self.mat[i]], int(self.levels[i]))
             for i in range(len(self.ids))
         ]
-        spark.createDataFrame(
-            nodes, "id bigint, vector array<double>, level int"
+        local_frame(
+            spark, nodes, "id bigint, vector array<double>, level int"
         ).repartition(1).write.mode("overwrite").parquet(f"{path}/nodes.parquet")
         edges = [
             (layer, int(u), [int(v) for v in vs])
             for layer, adj in enumerate(self.adj)
             for u, vs in adj.items()
         ]
-        spark.createDataFrame(
-            edges, "layer int, node bigint, neighbors array<bigint>"
+        local_frame(
+            spark, edges, "layer int, node bigint, neighbors array<bigint>"
         ).repartition(1).write.mode("overwrite").parquet(f"{path}/edges.parquet")
-        spark.createDataFrame(
-            [(self.m, self.ef_construction, self.metric, int(self.entry))],
+        local_frame(
+            spark, [(self.m, self.ef_construction, self.metric, int(self.entry))],
             "m int, ef_construction int, metric string, entry bigint",
         ).repartition(1).write.mode("overwrite").parquet(f"{path}/meta.parquet")
 
@@ -336,7 +337,7 @@ class HNSWIndex:
                 exclude_count=exclude_count,
             ),
         )
-        cand = spark.createDataFrame([(int(c),) for c in cand_ids], "id bigint")
+        cand = local_frame(spark, [(int(c),) for c in cand_ids], "id bigint")
         if exclude_ids is not None:
             cand = cand.join(
                 F.broadcast(exclude_ids.select(F.col(id_col).alias("id"))),
@@ -380,8 +381,8 @@ class HNSWIndex:
             qvec_rows.append((r["qid"], qv))
             for c in self.search_candidates(qv, ef_search=max(ef_search, k)):
                 cand_rows.append((r["qid"], int(c)))
-        cand = spark.createDataFrame(cand_rows, "qid bigint, id bigint")
-        qvecs = spark.createDataFrame(qvec_rows, "qid bigint, qv array<double>")
+        cand = local_frame(spark, cand_rows, "qid bigint, id bigint")
+        qvecs = local_frame(spark, qvec_rows, "qid bigint, qv array<double>")
         e = docs.select(
             F.col(id_col).cast("bigint").alias("id"),
             to_double_array(vec_col).alias("v"),
@@ -618,8 +619,8 @@ class DistributedHNSW:
         mismatched metric."""
         self.graphs.write.mode("overwrite").parquet(f"{path}/graphs.parquet")
         spark = self.graphs.sparkSession
-        spark.createDataFrame(
-            [(self.m, self.metric)], "m int, metric string"
+        local_frame(
+            spark, [(self.m, self.metric)], "m int, metric string"
         ).repartition(1).write.mode("overwrite").parquet(f"{path}/meta.parquet")
 
     @classmethod
@@ -736,7 +737,7 @@ class DistributedHNSW:
         cand = self.candidates_batch(
             qvec_rows, ef_search=max(ef_search, k)
         ).distinct()
-        qvecs = spark.createDataFrame(qvec_rows, "qid bigint, qv array<double>")
+        qvecs = local_frame(spark, qvec_rows, "qid bigint, qv array<double>")
         e = docs.select(
             F.col(id_col).cast("bigint").alias("id"),
             to_double_array(vec_col).alias("v"),

@@ -32,6 +32,7 @@ from comet_spark.functions.quantize import (
 )
 from comet_spark.functions.vector import distance, to_double_array
 from comet_spark.operators.topk import topk
+from comet_spark.session import local_frame
 
 __all__ = ["ScalarQuantizedIndex"]
 
@@ -71,7 +72,7 @@ class ScalarQuantizedIndex:
         self.encoded.write.mode("overwrite").parquet(f"{path}/vectors.parquet")
         spark = self.encoded.sparkSession
         meta = [(self.mode, float(self.abs_max) if self.abs_max is not None else None)]
-        spark.createDataFrame(meta, "mode string, abs_max double").repartition(
+        local_frame(spark, meta, "mode string, abs_max double").repartition(
             1
         ).write.mode("overwrite").parquet(f"{path}/meta.parquet")
 

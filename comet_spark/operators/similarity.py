@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from comet_spark.functions.vector import cosine_distance, to_double_array
+from comet_spark.session import local_frame
 
 __all__ = [
     "cosine_pairs_expr",
@@ -404,7 +405,7 @@ def lsh_ann_topk(
         )
         if key not in _LSH_WRITTEN:
             sigs.write.mode("overwrite").parquet(f"{artifacts_path}/sigs.parquet")
-            spark.createDataFrame([(qfull,)], "qfull bigint").repartition(
+            local_frame(spark, [(qfull,)], "qfull bigint").repartition(
                 1
             ).write.mode("overwrite").parquet(f"{artifacts_path}/qmeta.parquet")
             _LSH_WRITTEN.add(key)

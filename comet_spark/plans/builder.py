@@ -16,7 +16,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field as dc_field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from comet_spark.operators import fusion as fusion_ops
@@ -25,6 +25,7 @@ from comet_spark.operators.bm25 import BM25
 from comet_spark.operators.knn import knn, knn_aggregate
 from comet_spark.operators.metadata import Filter, Group, Where
 from comet_spark.operators.topk import topk
+from comet_spark.session import local_frame
 
 __all__ = ["Corpus", "VectorSearch", "TextSearch", "HybridSearch"]
 
@@ -341,13 +342,11 @@ class VectorSearch:
 
     def _query_df(self) -> DataFrame:
         c = self.corpus
-        spark = c.docs.sparkSession
         parts = []
         if self._queries:
             parts.append(
-                spark.createDataFrame(
-                    [(i, [float(x) for x in v]) for i, v in enumerate(self._queries)],
-                    "qid bigint, qvec array<double>",
+                self._local_queries(
+                    (i, [float(x) for x in v]) for i, v in enumerate(self._queries)
                 )
             )
         if self._node_ids:
@@ -362,6 +361,27 @@ class VectorSearch:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def _local_queries(self, rows) -> DataFrame:
+        """Driver-held ``(qid, qvec)`` rows as a local relation: the batch
+        paths take collected query rows back this way (no second
+        node-lookup join)."""
+        return local_frame(
+            self.corpus.docs.sparkSession, rows, "qid bigint, qvec array<double>"
+        )
+
+    def _query_rows(self) -> list:
+        """The query batch as collected ``(qid, qvec)`` rows. Driver-held
+        vectors come straight from ``_queries``; only node-id queries
+        run their lookup join."""
+        if self._node_ids:
+            return self._query_df().collect()
+        if not self._queries:
+            raise ValueError("vector search needs with_query(...) or with_node(...)")
+        return [
+            Row(qid=i, qvec=[float(x) for x in v])
+            for i, v in enumerate(self._queries)
+        ]
 
     def execute(self) -> DataFrame:
         c = self.corpus
@@ -460,7 +480,7 @@ class VectorSearch:
         """PQ / IVFPQ compressed-domain paths (per-query ADC scan, optional
         exact rescore, cross-query aggregation for batches)."""
         c = self.corpus
-        qrows = self._query_df().collect()
+        qrows = self._query_rows()
         vectors = c.docs if self.rescore else None
         auto_map, nprobes = self._effective_nprobes(qrows)
         if nprobes == 0 and not self.rescore and len(qrows) > 1:
@@ -477,11 +497,7 @@ class VectorSearch:
             # rebuild the query DF from the ALREADY-collected rows — going
             # back through _query_df() would re-run the node-lookup join
             # just for search_batch to collect it again
-            qlocal = c.docs.sparkSession.createDataFrame(
-                [(r["qid"], [float(x) for x in r["qvec"]]) for r in qrows],
-                "qid bigint, qvec array<double>",
-            )
-            per_query = c._pq.search_batch(codes, qlocal, k=self.k)
+            per_query = c._pq.search_batch(codes, self._local_queries(qrows), k=self.k)
             out = knn_aggregate(per_query, k=self.k, agg=self.agg, ascending=True)
             if self.threshold is not None and self.threshold > 0:
                 out = out.filter(F.col("score") <= F.lit(self.threshold))
@@ -545,8 +561,7 @@ class VectorSearch:
         scans into one lazy DAG (queries are driver-held literals either
         way, so no extra collect happens)."""
         c = self.corpus
-        qdf = self._query_df()
-        qrows = qdf.collect()
+        qrows = self._query_rows()
         auto_map, nprobes = self._effective_nprobes(qrows)
         if nprobes > 0:
             if c._ivf is None:
@@ -567,7 +582,7 @@ class VectorSearch:
                 # an auto batch probes PER QUERY (each query joins only
                 # its own lists) — the max is just the path gate above
                 per_query = c._ivf.search_batch(
-                    docs, qdf, k=self.k,
+                    docs, self._local_queries(qrows), k=self.k,
                     nprobe=auto_map if auto_map else nprobes,
                     id_col=c.id_col, vec_col=c.vec_col,
                 )
@@ -585,7 +600,8 @@ class VectorSearch:
                 # prefilter applies at the distributed scoring step = the
                 # reference's post-filter-by-docIDs semantics
                 per_query = c._hnsw.search_batch(
-                    docs, qdf, k=self.k, ef_search=self.ef_search,
+                    docs, self._local_queries(qrows), k=self.k,
+                    ef_search=self.ef_search,
                     id_col=c.id_col, vec_col=c.vec_col,
                 )
                 out = knn_aggregate(per_query, k=self.k, agg=self.agg, ascending=True)
@@ -726,9 +742,7 @@ class TextSearch:
                 for t in tokenize_py(q):
                     terms[t] = terms.get(t, 0) + 1
                 rows.extend((qid, t, float(n)) for t, n in terms.items())
-            qterms = spark.createDataFrame(
-                rows, "qid bigint, term string, qtf double"
-            )
+            qterms = local_frame(spark, rows, "qid bigint, term string, qtf double")
             per_query = c.bm25().score_batch(qterms, k=self.k, prefilter_ids=ids)
             out = knn_aggregate(per_query, k=self.k, agg=self.agg, ascending=False)
         if self.cutoff != -1:

@@ -1,10 +1,21 @@
-"""SparkSession factory + testdata table loader."""
+"""SparkSession factory, driver-held rows as local relations, testdata
+table loader.
+
+Rule: rows the driver already holds (ids, query vectors, probe tables,
+one-row meta/stats records) become a DataFrame through
+:func:`local_frame`, never ``spark.createDataFrame(<python list>)``. A
+list turns into a pickled RDD that costs one to three Spark jobs every
+time the frame is evaluated, even for a single row; the Arrow table
+:func:`local_frame` builds plans as a ``LocalTableScan``, which the
+driver evaluates with no job at all.
+"""
 
 from __future__ import annotations
 
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -43,6 +54,38 @@ def get_spark(app_name: str = "comet-spark", cpus: str | None = None) -> SparkSe
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """``rows`` (tuples or :class:`Row` s, positional in ``schema``'s field
+    order) as a DataFrame over a local relation. ``schema`` is a DDL
+    string or a ``StructType``; the result has exactly that schema, also
+    for zero rows. Values convert through Arrow, so the frame holds the
+    same values ``spark.createDataFrame(rows, schema)`` would, and
+    evaluating it (``collect``/``first``/a join's build side) starts no
+    Spark job. This path is independent of
+    ``spark.sql.execution.arrow.*``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    names = schema.fieldNames()
+    cols: list[list] = [[] for _ in names]
+    for r in rows:
+        if len(r) != len(names):
+            raise ValueError(
+                f"local_frame: row {r!r} has {len(r)} values, "
+                f"schema has {len(names)} fields"
+            )
+        for c, v in zip(cols, r):
+            c.append(v)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

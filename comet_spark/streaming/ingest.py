@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from comet_spark.session import local_frame
 from comet_spark.storage.store import DocumentStore
 
 __all__ = [
@@ -1543,8 +1544,8 @@ def hnsw_ingest_stream(
                         # semi-join applies it everywhere else)
                         store.delete(del_ids)
                 if not fs.exists(f"{graph_base}/meta.parquet/_SUCCESS"):
-                    spark.createDataFrame(
-                        [(m, metric)], "m int, metric string"
+                    local_frame(
+                        spark, [(m, metric)], "m int, metric string"
                     ).repartition(1).write.mode("overwrite").parquet(
                         f"{graph_base}/meta.parquet"
                     )
@@ -1588,8 +1589,8 @@ def hnsw_ingest_stream(
                 # state exists (ADVICE r12); m/metric are in hand,
                 # rewrite it here too
                 if not fs.exists(f"{graph_base}/meta.parquet/_SUCCESS"):
-                    spark.createDataFrame(
-                        [(m, metric)], "m int, metric string"
+                    local_frame(
+                        spark, [(m, metric)], "m int, metric string"
                     ).repartition(1).write.mode("overwrite").parquet(
                         f"{graph_base}/meta.parquet"
                     )
@@ -1831,7 +1832,8 @@ def compact_sig_store(
         _heal_dir(fs, sig_store_path)
         if not _parquet_exists(spark, sig_store_path):
             return False
-        names = [n for n in fs.listdir(sig_store_path) if not n.startswith(".")]
+        # data files only: the _SUCCESS marker is not a file to merge
+        names = [n for n in fs.listdir(sig_store_path) if n.startswith("part-")]
         if len(names) <= min_files:
             return False
         df = spark.read.parquet(sig_store_path).distinct()
@@ -1976,18 +1978,15 @@ def _bm25_full_write(
     docs: DataFrame, index_path: str, *,
     id_col: str, text_col: str, normalize: bool, buckets: int,
 ) -> None:
-    """Build + persist a BM25 index with the cache-then-unpersist write
-    pattern (the four table writes share one tokenize/aggregate pass)."""
+    """Build + persist a BM25 index: the postings are materialized once
+    (``checkpoint=True``), so the four table writes share one
+    tokenize/aggregate pass."""
     from comet_spark.operators.bm25 import BM25
 
-    bld = BM25(
-        docs, id_col=id_col, text_col=text_col, normalize=normalize, cache=True
-    )
-    try:
-        bld.write(index_path, buckets=buckets)
-    finally:
-        for t in (bld.postings, bld.doc_len, bld.df, bld.stats):
-            t.unpersist()
+    BM25(
+        docs, id_col=id_col, text_col=text_col, normalize=normalize,
+        checkpoint=True,
+    ).write(index_path, buckets=buckets)
 
 
 def bm25_ingest_stream(
@@ -2102,8 +2101,8 @@ def bm25_ingest_stream(
     first = [True]  # only the first batch after a (re)start can be a replay
 
     def _log(spark, batch_id: int, phase: str) -> None:
-        spark.createDataFrame(
-            [(int(batch_id), phase)], "batch_id bigint, phase string"
+        local_frame(
+            spark, [(int(batch_id), phase)], "batch_id bigint, phase string"
         ).repartition(1).write.mode("append").parquet(state_path)
 
     def _phases(spark, batch_id: int) -> set:
@@ -2134,7 +2133,8 @@ def bm25_ingest_stream(
         pathologically-backlogged log can't balloon the driver with its
         full history — VERDICT r07 #7)."""
         fs = _FS(spark, state_path)
-        names = [n for n in fs.listdir(state_path) if not n.startswith(".")]
+        # data files only: the _SUCCESS marker is not a log file
+        names = [n for n in fs.listdir(state_path) if n.startswith("part-")]
         if len(names) <= state_compact_files:
             return
         log = spark.read.parquet(state_path)
@@ -2151,8 +2151,8 @@ def bm25_ingest_stream(
         ]
         _swap_dir(
             fs, state_path, [],
-            lambda tmp: spark.createDataFrame(
-                keep, "batch_id bigint, phase string"
+            lambda tmp: local_frame(
+                spark, keep, "batch_id bigint, phase string"
             ).repartition(1).write.mode("overwrite").parquet(tmp),
         )
 
@@ -2539,7 +2539,7 @@ def hll_stream(
             merged = part
         rows = merged.collect()
         if rows:
-            spark.createDataFrame(rows, merged.schema).repartition(1).write.mode(
+            local_frame(spark, rows, merged.schema).repartition(1).write.mode(
                 "overwrite"
             ).parquet(state_path)
 

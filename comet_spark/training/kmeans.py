@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from comet_spark.functions.vector import to_double_array
+from comet_spark.session import local_frame
 
 __all__ = ["kmeans_train", "kmeans_train_grouped", "assign_clusters"]
 
@@ -146,8 +147,8 @@ def kmeans_train(
     for pid in sorted(pc):
         offsets[pid] = acc
         acc += pc[pid]
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "__pid int, __off bigint"
+    off_df = local_frame(
+        spark, [(int(p), int(o)) for p, o in offsets.items()], "__pid int, __off bigint"
     )
     wl = Window.partitionBy("__pid").orderBy("id")
     init_rows = (
@@ -265,8 +266,8 @@ def kmeans_train_grouped(
         kk = min(k, n)
         step = max(n // kk, 1)
         wanted[g] = sorted({min(j * step, n - 1) + 1 for j in range(kk)})
-    wanted_df = spark.createDataFrame(
-        [(g, rn) for g, rns in wanted.items() for rn in rns], "g bigint, __rn int"
+    wanted_df = local_frame(
+        spark, [(g, rn) for g, rns in wanted.items() for rn in rns], "g bigint, __rn int"
     )
     init = (
         e.withColumn("__rn", F.row_number().over(w))

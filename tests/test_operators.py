@@ -1435,10 +1435,12 @@ def test_bm25_tiered_compact_merges_small_segments_only(spark, tmp_path):
     from comet_spark.operators.bm25 import BM25, _postings_table_name
 
     # the base must be genuinely top-tier (≥4x the append files) — at
-    # parquet's ~1KB file floor a tiny corpus cannot separate tiers
+    # parquet's ~1KB file floor a tiny corpus cannot separate tiers: each
+    # 10-doc append lands as one ~1.1KB file per bucket, so every base
+    # bucket file must exceed ~4.5KB (2,000 docs)
     rows = [
         (i, f"spark data tables term{i % 7} filler{i % 31} extra{i % 13}")
-        for i in range(1, 1031)
+        for i in range(1, 2031)
     ]
     full = spark.createDataFrame(rows, "id bigint, text string")
     fresh = BM25(full)
@@ -1448,7 +1450,7 @@ def test_bm25_tiered_compact_merges_small_segments_only(spark, tmp_path):
 
     for buckets in (0, 4):
         path = str(tmp_path / f"tix{buckets}")
-        BM25(full.filter(F.col("id") <= 1000)).write(path, buckets=buckets)
+        BM25(full.filter(F.col("id") <= 2000)).write(path, buckets=buckets)
 
         def _sizes(p=path):
             return {
@@ -1457,7 +1459,7 @@ def test_bm25_tiered_compact_merges_small_segments_only(spark, tmp_path):
             }
 
         base_files = _sizes()
-        for lo, hi in ((1000, 1010), (1010, 1020), (1020, 1030)):
+        for lo, hi in ((2000, 2010), (2010, 2020), (2020, 2030)):
             BM25.append(
                 spark, path, full.filter((F.col("id") > lo) & (F.col("id") <= hi))
             )
@@ -1794,3 +1796,34 @@ def test_bm25_delete_compact_crash_sweep(spark, tmp_path):
         assert spark.read.parquet(f"{path}/doc_len").count() == 24 - len(deleted), k
         st = spark.read.parquet(f"{path}/stats").first()
         assert st["n_docs"] == 24 - len(deleted), k
+
+
+def test_bm25_append_writes_one_file_per_table(spark, tmp_path):
+    """A small append lands as ONE part file in each of postings,
+    doc_len, df and stats: the writes keep the partitioning AQE picks for
+    the batch instead of one file per shuffle partition."""
+    import glob
+
+    from comet_spark.operators.bm25 import BM25
+
+    path = str(tmp_path / "one_file")
+    BM25(
+        spark.createDataFrame(
+            [(i, f"spark doc {i} tables") for i in range(20)], "id bigint, text string"
+        )
+    ).write(path)
+    tables = ("postings", "doc_len", "df", "stats")
+
+    def _parts():
+        return {t: set(glob.glob(f"{path}/{t}/part-*")) for t in tables}
+
+    before = _parts()
+    BM25.append(
+        spark, path,
+        spark.createDataFrame(
+            [(100 + i, f"fresh spark batch doc {i} word{i % 7}") for i in range(20)],
+            "id bigint, text string",
+        ),
+    )
+    after = _parts()
+    assert {t: len(after[t] - before[t]) for t in tables} == {t: 1 for t in tables}

@@ -1287,6 +1287,27 @@ def test_bm25_ingest_state_compaction_crash_sweep(spark, tmp_path):
         assert [tuple(r) for r in live.score("spark doc", k=0).collect()] == want, k
 
 
+def test_bm25_ingest_state_log_counts_data_files_only(spark, tmp_path):
+    """``state_compact_files`` bounds the log's DATA files: with a bound
+    of 2, the log batch 0 leaves (its 'begin' and 'done' rows, one part
+    file each) is not rewritten — the _SUCCESS marker does not count."""
+    import glob
+
+    from comet_spark.streaming.ingest import bm25_ingest_stream
+
+    src = str(tmp_path / "cnt_src")
+    _batch(spark, [(1, "spark log doc"), (2, "spark state doc")]).coalesce(
+        1
+    ).write.parquet(src)
+    ix = str(tmp_path / "cnt_ix")
+    bm25_ingest_stream(
+        spark.readStream.schema("id bigint, text string").parquet(src),
+        DocumentStore(spark, str(tmp_path / "cnt_store")), ix,
+        checkpoint=str(tmp_path / "cnt_ckpt"), buckets=0, state_compact_files=2,
+    ).awaitTermination(120)
+    assert len(glob.glob(f"{ix}/_ingest_state/part-*")) == 2
+
+
 def test_store_compact_zorder(spark, tmp_path):
     """OPTIMIZE ZORDER on compaction: results identical, and within each
     written file the Z-key range is bounded (files are clustered — the
