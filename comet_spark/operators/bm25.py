@@ -14,18 +14,21 @@ Reference semantics (``bm25_index_search.go:278-327``, constants
   stats cover the whole corpus).
 - results sort score *descending* (``index_search.go:281-312``).
 
-Spark shape: postings/doc-length/df are plain aggregations over an exploded
-token table (map-side combine applies); the query-term table is tiny and
-broadcast; scoring is one join + groupBy(id).sum() — no Python in the plan.
-At cluster scale the postings build is a single shuffle on (id, term) and
-scoring shuffles only the posting rows of the query's terms.
+Spark shape: postings/doc-length are plain aggregations over an exploded
+token table (map-side combine applies). No document-frequency table is
+stored: like the reference, which takes df from the term's posting list
+at query time (``bm25_index_search.go:306``), scoring counts each query
+term's live posting rows with a window inside the plan. Scoring is that
+window + one join + groupBy(id).sum() — no Python in the plan. At cluster
+scale the postings build is a single shuffle on (id, term) and scoring
+reads only the posting rows of the query's terms.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from comet_spark.functions.text import tokenize
@@ -115,15 +118,15 @@ def _meta_buckets(spark, fs, path: str) -> int:
 
 def _heal_tables(fs, path: str) -> None:
     """EVERY index write path's entry heal, under the writer lock:
-    ``storage.store._heal_dir`` on each of the four tables (crash states:
+    ``storage.store._heal_dir`` on each of the three tables (crash states:
     that module's docstring). It must run on write/append too, not just
     on a compact re-run: ``append`` RECREATES a missing table directory
     on its mode-append write, so an append landing on a crashed
-    compact's df/stats window would rebuild those tables from one batch
-    — silently inflating idf for every pre-existing term."""
+    compact's stats window would rebuild that table from one batch —
+    silently shrinking n_docs/avgdl for every query."""
     from comet_spark.storage.store import _heal_dir
 
-    for sub in ("doc_len", "postings", "df", "stats"):
+    for sub in ("doc_len", "postings", "stats"):
         _heal_dir(fs, f"{path}/{sub}")
 
 
@@ -313,7 +316,10 @@ def _token_table(
 
 
 class BM25:
-    """A BM25 'index' = three small derived DataFrames over a corpus.
+    """A BM25 'index' = postings plus two small derived DataFrames
+    (doc_len, stats) over a corpus. ``df`` (postings grouped by term) is
+    a derived view for inspection only: scoring counts df from the
+    query terms' live postings in its own plan.
 
     ``cache=True`` persists the postings/doc-stats (the 'index build'):
     right when several queries hit the same corpus — exactly the situation
@@ -355,7 +361,8 @@ class BM25:
             .join(dl_pos, "id", "left")
             .select("id", F.coalesce("dl", F.lit(0)).alias("dl"))
         )
-        # document frequency per term
+        # document frequency per term: a view only — nothing scores from
+        # it or persists it, so it is never cached
         self.df = self.postings.groupBy("term").agg(F.count("*").alias("df"))
         # total_dl (exact — dl is integral) rides along so :meth:`append`
         # can merge per-segment stats without an avgdl rounding error.
@@ -365,11 +372,10 @@ class BM25:
             F.sum("dl").cast("double").alias("total_dl"),
         )
         if cache:
-            # the derived tables are doc- and vocabulary-sized — caching
-            # them (not just the postings) is what makes repeat queries
-            # skip every corpus-wide aggregation
+            # the derived tables are doc-sized — caching them (not just
+            # the postings) is what makes repeat queries skip every
+            # corpus-wide aggregation
             self.doc_len = self.doc_len.cache()
-            self.df = self.df.cache()
             self.stats = self.stats.cache()
         # ids soft-deleted via :meth:`delete` (set by :meth:`read` when a
         # persisted index carries a delete vector); None = nothing deleted
@@ -419,7 +425,6 @@ class BM25:
                 1
             ).write.mode("overwrite").parquet(f"{path}/meta")
             self.doc_len.write.mode("overwrite").parquet(f"{path}/doc_len")
-            self.df.write.mode("overwrite").parquet(f"{path}/df")
             self.stats.repartition(1).write.mode("overwrite").parquet(f"{path}/stats")
 
     @classmethod
@@ -488,18 +493,15 @@ class BM25:
         else:
             ix.postings = spark.read.parquet(f"{path}/postings")
         ix.doc_len = spark.read.parquet(f"{path}/doc_len")
-        ix.df = spark.read.parquet(f"{path}/df")
-        ix.stats = spark.read.parquet(f"{path}/stats")
+        ix.stats = spark.read.schema(_STATS_SCHEMA).parquet(f"{path}/stats")
         # Incremental appends (:meth:`append`) leave one stats row per
         # segment. The merge is exact: postings/doc_len concatenate (ids
-        # are disjoint by append's contract), df partials SUM per term,
-        # and avgdl recomputes from the integral total_dl — so an
-        # appended-then-reopened index is value-identical to a fresh
-        # full-corpus build. A single-segment index (the common case)
-        # keeps the plain single-row broadcast plan untouched.
+        # are disjoint by append's contract) and avgdl recomputes from
+        # the integral total_dl — so an appended-then-reopened index is
+        # value-identical to a fresh full-corpus build. A single-segment
+        # index (the common case) keeps its stored row.
         segs = ix.stats.collect()  # one tiny row per segment
         if len(segs) > 1:
-            ix.df = ix.df.groupBy("term").agg(F.sum("df").alias("df"))
             n = float(sum(r["n_docs"] for r in segs))
             tdl = float(sum(r["total_dl"] or 0.0 for r in segs))
             ix.stats = local_frame(
@@ -531,6 +533,10 @@ class BM25:
             ix.stats = local_frame(
                 spark, [(n2, tdl2 / n2 if n2 else None, tdl2)], _STATS_SCHEMA
             )
+        live_posts = ix.postings
+        if dels is not None:
+            live_posts = live_posts.join(F.broadcast(dels), "id", "left_anti")
+        ix.df = live_posts.groupBy("term").agg(F.count("*").alias("df"))
         return ix
 
     @classmethod
@@ -549,9 +555,9 @@ class BM25:
         J-family index maintenance for the text side, matching the ANN
         layouts' refresh/compact story. Only the appended batch is
         tokenized — in one pass: its postings are materialized once
-        (``checkpoint=True``) and doc_len/df/stats derive from them — and
-        its postings/doc_len land as extra segment files while df/stats
-        gain one per-segment partial each. Each write is sized by AQE
+        (``checkpoint=True``) and doc_len/stats derive from them — and
+        its postings/doc_len land as extra segment files while stats
+        gains one per-segment row. Each write is sized by AQE
         for the batch's data, so a small batch adds one part file per
         table (not one per shuffle partition for the fresh reads and the
         compaction to scan). Nothing on disk is
@@ -577,14 +583,14 @@ class BM25:
         Upsert/delete semantics belong to the LSM merge view
         (lsm_merge_bm25), not here.
 
-        Crash/concurrency contract: doc_len is written FIRST, so a retry
-        of a torn append always fail-fasts on the duplicate-id probe
-        instead of silently double-counting postings; stats is written
-        LAST as the segment's commit record. Between those, readers that
-        open mid-append may transiently score the batch's docs with
-        stale df/stats (bounded — previously indexed docs are
-        unaffected); like the reference's single-writer index, open
-        readers after the append completes, and recover a torn index by
+        Crash/concurrency contract: the writes go doc_len → postings →
+        stats. doc_len is written FIRST, so a retry of a torn append
+        always fail-fasts on the duplicate-id probe instead of silently
+        double-counting postings; stats is written LAST as the segment's
+        commit record. Between those, readers that open mid-append may
+        transiently see the batch's postings (and so its df counts)
+        without its stats row; like the reference's single-writer index,
+        open readers after the append completes, and recover a torn index by
         rebuilding from the corpus (``BM25(...).write(path)``) or let
         :func:`~comet_spark.streaming.ingest.bm25_ingest_stream`'s heal
         path do it."""
@@ -594,12 +600,6 @@ class BM25:
             fs = _FS(spark, path)
             _heal_tables(fs, path)
             buckets = _meta_buckets(spark, fs, path)
-            if "total_dl" not in spark.read.parquet(f"{path}/stats").columns:
-                raise ValueError(
-                    "append(): index was written by a version without "
-                    "per-segment stats (no total_dl column); rebuild it once "
-                    "with BM25(...).write(path) before appending"
-                )
             if check_disjoint:
                 # inside the lock: the probe is a read-then-write on the
                 # id ledger, exactly what the lock serializes
@@ -617,7 +617,7 @@ class BM25:
                         "through the LSM merge view instead)"
                     )
             # checkpoint=True: the batch is tokenized and aggregated ONCE
-            # (doc_len/df/stats all derive from the materialized
+            # (doc_len/stats derive from the materialized
             # postings), and every write keeps the partitioning AQE
             # picks for its data — one part file per table for a small
             # batch (a cached plan would pin shuffle.partitions files)
@@ -643,11 +643,6 @@ class BM25:
                 )
             else:
                 seg.postings.write.mode("append").parquet(f"{path}/postings")
-            # df AFTER postings: a df partial without its postings
-            # would inflate idf for terms existing docs already
-            # carry; this way a torn state only under-scores the
-            # (unfinished) batch
-            seg.df.write.mode("append").parquet(f"{path}/df")
             # stats LAST: the segment's commit record
             seg.stats.repartition(1).write.mode("append").parquet(
                 f"{path}/stats"
@@ -671,15 +666,16 @@ class BM25:
         byte-identically to an index built without those docs.
 
         Every correction is derived from the vector's intersection with
-        LIVE rows (doc_len for n_docs/avgdl at read; the literal-pruned
-        postings scan for df at query time), never from numbers stored
-        at delete time — so the one write here is a single append of
-        independently-valid id rows: any torn/partial state is simply
-        "fewer deletes landed", and a vector entry whose rows a later
-        FULL compact already dropped contributes exactly nothing.
-        :meth:`compact` with ``tiered=False`` applies the vector
-        physically (drops the rows, recomputes df/stats from survivors,
-        clears the vector); ``tiered=True`` retains it, like the store's
+        LIVE rows (doc_len for n_docs/avgdl at read; the query terms'
+        anti-joined postings for df, counted inside the scoring plan),
+        never from numbers stored at delete time — so the one write here
+        is a single append of independently-valid id rows: any
+        torn/partial state is simply "fewer deletes landed", and a
+        vector entry whose rows a later FULL compact already dropped
+        contributes exactly nothing. :meth:`compact` with
+        ``tiered=False`` applies the vector physically (drops the rows,
+        recomputes stats from survivors, clears the vector);
+        ``tiered=True`` retains it, like the store's
         tiered merge retains the base's delete files.
 
         A deleted id stays in the id LEDGER (doc_len) until that full
@@ -768,18 +764,16 @@ class BM25:
         ``DocumentStore.compact`` (reference segment compaction,
         ``storage_compaction.go:19-114`` merges the oldest segments and
         swaps atomically). :meth:`append` accumulates one postings/
-        doc_len segment and one df/stats partial per batch; this rewrite
+        doc_len segment and one stats row per batch; this rewrite
         merges them back to the single-segment shape WITHOUT touching
         the corpus: postings rows are disjoint by id across segments, so
         consolidation is a file-level rewrite (one hash shuffle of the
         index-sized postings back into the bucket layout — no
-        re-tokenize, no corpus scan), df partials collapse with a
-        vocabulary-sized ``groupBy(term).sum``, and the per-segment
-        stats rows fold into one exactly (integral ``total_dl``, the
-        same merge :meth:`read` applies lazily). Afterwards
-        :meth:`read`'s single-segment fast path re-engages (one stats
-        row, no df re-aggregation in the query plan) and literal-term
-        bucket pruning sees one file per bucket. Cost ∝ index size —
+        re-tokenize, no corpus scan), and the per-segment stats rows
+        fold into one exactly (integral ``total_dl``, the same merge
+        :meth:`read` applies). Afterwards :meth:`read` finds one stats
+        row and literal-term bucket pruning sees one file per bucket.
+        Cost ∝ index size —
         compare the full rebuild, which pays tokenize + an (id, term)
         corpus shuffle first (measured in SCALE_SOAK.json).
 
@@ -810,9 +804,8 @@ class BM25:
         top tier) — so on a huge index that absorbed small appends, the
         per-call rewrite is bounded by ~base/4 and typically just the
         appended segments (bytes measured in SCALE_SOAK.json). Valid
-        because rows are disjoint by id across segment files; df/stats
-        still rewrite fully (their partials overlap per term / fold to
-        one row, and both are vocabulary-/single-row-sized). Above the
+        because rows are disjoint by id across segment files; stats
+        still rewrites fully (its rows fold to one). Above the
         consolidation cap the policy switches to the absolute
         size-class ladder (within-tier merging: each filled class
         merges into one output PROMOTED to the next class; files at the
@@ -829,14 +822,9 @@ class BM25:
         with _index_writer_lock(spark, path, "compact"):
             _heal_tables(fs, path)
             buckets = _meta_buckets(spark, fs, path)
-            stats_rows = spark.read.parquet(f"{path}/stats").collect()
-            if len(stats_rows) > 1 and any(
-                "total_dl" not in r.asDict() or r["total_dl"] is None for r in stats_rows
-            ):
-                raise ValueError(
-                    "compact(): index carries pre-total_dl stats segments; "
-                    "rebuild it once with BM25(...).write(path)"
-                )
+            stats_rows = (
+                spark.read.schema(_STATS_SCHEMA).parquet(f"{path}/stats").collect()
+            )
             # delete vector, loaded ONCE up front: the ledger check below
             # must be vector-aware, and the full path applies it. Only
             # absence (incl. an uncommitted dir) is tolerated; a read
@@ -880,64 +868,30 @@ class BM25:
             def _swap(sub: str, writer) -> None:
                 _swap_dir(fs, f"{path}/{sub}", [], writer)
 
-            def _finish_small_tables(nf: int, from_live: bool = False) -> None:
-                # df partials OVERLAP per term (unlike the disjoint-by-id
-                # postings/doc_len rows) so their collapse is a semantic
-                # groupBy — but vocabulary-sized, cheap in every mode; the
-                # single merged stats row is what re-engages read()'s
-                # fast path. ``from_live`` (the delete-applying full
-                # compact) recomputes BOTH tables exactly from the
-                # just-swapped survivor rows instead of folding the stale
-                # partials: df = postings count per term, stats from
-                # doc_len — no re-tokenize, and the on-disk ledger
-                # (stats.n_docs == doc_len rows) stays consistent.
+            def _finish_stats(from_live: bool = False) -> None:
+                # fold the per-segment rows into one exactly (integral
+                # total_dl). ``from_live`` (the delete-applying full
+                # compact) instead recounts from the just-swapped
+                # survivor doc_len — no re-tokenize, and the on-disk
+                # ledger (stats.n_docs == doc_len rows) stays consistent.
+                # an empty segment's total_dl is NULL (sum over no rows)
+                tdl = float(sum(r["total_dl"] or 0.0 for r in stats_rows))
+                n = n_docs
                 if from_live:
-                    _swap(
-                        "df",
-                        lambda t: spark.read.parquet(f"{path}/postings")
-                        .groupBy("term").agg(F.count("*").alias("df"))
-                        .coalesce(nf).write.mode("overwrite").parquet(t),
-                    )
                     r = spark.read.parquet(f"{path}/doc_len").agg(
                         F.count("*").alias("n"), F.sum("dl").alias("s")
                     ).first()
-                    n2, tdl2 = float(r["n"]), float(r["s"] or 0.0)
-                    merged = local_frame(
-                        spark, [(n2, tdl2 / n2 if n2 else None, tdl2)],
-                        _STATS_SCHEMA,
-                    )
-                    _swap(
-                        "stats",
-                        lambda t: merged.repartition(1)
-                        .write.mode("overwrite").parquet(t),
-                    )
-                    return
-                _swap(
-                    "df",
-                    lambda t: spark.read.parquet(f"{path}/df")
-                    .groupBy("term").agg(F.sum("df").alias("df"))
-                    .coalesce(nf).write.mode("overwrite").parquet(t),
+                    n, tdl = float(r["n"]), float(r["s"] or 0.0)
+                # a local relation: the swap never reads the dir it replaces
+                merged = local_frame(
+                    spark, [(n, tdl / n if n else None, tdl)], _STATS_SCHEMA
                 )
-                if len(stats_rows) > 1:
-                    tdl = float(sum(r["total_dl"] for r in stats_rows))
-                    merged = local_frame(
-                        spark, [(n_docs, tdl / n_docs if n_docs else None, tdl)],
-                        _STATS_SCHEMA,
-                    )
-                else:
-                    # single segment: stats pass through unchanged
-                    # (collected above — recreating from rows severs any
-                    # read of the dir mid-swap and keeps whatever schema
-                    # the index carries)
-                    cur = spark.read.parquet(f"{path}/stats")
-                    merged = local_frame(spark, stats_rows, cur.schema)
                 _swap(
                     "stats",
                     lambda t: merged.repartition(1)
                     .write.mode("overwrite").parquet(t),
                 )
 
-            nf = max(1, -(-n_dl // rows_per_file))
             if tiered:
                 # the delete vector (if any) rides along untouched: tiered
                 # merges keep every row, so the read path's live-row-
@@ -950,18 +904,19 @@ class BM25:
                     _postings_table_name(path)
                 ):
                     spark.catalog.refreshTable(_postings_table_name(path))
-                _finish_small_tables(nf)
+                _finish_stats()
                 return
             # full compact applies the delete vector physically (the
             # hard-delete rewrite, store J6's text twin): survivors-only
-            # postings/doc_len, df/stats recomputed exactly from them,
+            # postings/doc_len, stats recomputed exactly from them,
             # the vector cleared LAST. Every intermediate crash state
             # reads correctly because the read path derives all
             # delete-sensitive statistics live (see read()/_scored), and
             # a compact re-run converges: anti-joins over already-
             # rewritten tables are no-ops, the ledger check above
             # accepts the mixed cardinality, and the from_live recompute
-            # rebuilds df/stats from whatever survived.
+            # rebuilds stats from whatever survived.
+            nf = max(1, -(-n_dl // rows_per_file))
 
             def _survivors(sub: str):
                 t = spark.read.parquet(f"{path}/{sub}")
@@ -1004,241 +959,94 @@ class BM25:
                     lambda t: _survivors("postings")
                     .coalesce(nf).write.mode("overwrite").parquet(t),
                 )
-            _finish_small_tables(nf, from_live=dels is not None)
+            _finish_stats(from_live=dels is not None)
             if dels is not None:
                 fs.delete(f"{path}/deletes")
 
 
-    def _aux_literals(self, terms: list[str]):
-        """Driver-side (n_docs, avgdl, {term: df}) for a constant query —
-        the literal twin of the ``df_eff × stats`` broadcast in
-        :meth:`_scored` (r14, guide §2.4/§3.1).
-
-        These are INDEX STATISTICS (the same numbers the persisted
-        ``df``/``stats`` artifacts hold), fetched once per instance and
+    def _stats_literals(self) -> tuple:
+        """Driver-side ``(n_docs, avgdl)``, fetched once per instance and
         memoized on it — the convention the trained ANN models already
         follow (centroids/codebooks live driver-side and are folded into
-        query literals). Nothing query-result-shaped is cached: the
-        instance itself is corpus-fingerprint-keyed by its owners, so a
-        testdata regen builds a fresh index and a fresh memo.
-
-        With a delete vector, df derives LIVE — the same anti-join +
-        recount over the (pruned) postings the per-execution plan ran —
-        but only ONCE per instance: an instance's tables are an
-        immutable committed snapshot (``del_ids`` is set exactly once,
-        by :meth:`read`), so the recount lands on the same integers
-        every execution. The crash-state exactness argument (any mix of
-        applied/unapplied tables recounts to the same numbers) holds at
-        that derivation unchanged; ``self.stats`` on this path is
-        already the live-derived row read() built."""
-        cache = getattr(self, "_aux_lit_cache", None)
-        if cache is None:
-            cache = self._aux_lit_cache = {"stats": None, "df": {}}
-        if cache["stats"] is None:
+        query literals). An instance's tables are an immutable committed
+        snapshot (:meth:`read` sets ``stats`` — live-derived under a
+        delete vector — exactly once), so every query sees the same
+        doubles; collect() round-trips their exact bits."""
+        memo = getattr(self, "_stats_memo", None)
+        if memo is None:
             r = self.stats.first()
-            # n_docs/avgdl are DOUBLE columns; collect() round-trips the
-            # exact bits, so the literals below feed the scoring
-            # expression the same doubles the broadcast row carried
-            cache["stats"] = (r["n_docs"], r["avgdl"])
-        missing = [t for t in terms if t not in cache["df"]]
-        if missing:
-            if self.del_ids is not None:
-                src = self.postings.filter(F.col("term").isin(missing)).join(
-                    F.broadcast(self.del_ids), "id", "left_anti"
-                )
-                got = {
-                    r["term"]: int(r["df"])
-                    for r in src.groupBy("term")
-                    .agg(F.count("*").alias("df"))
-                    .collect()
-                }
-            else:
-                got = {
-                    r["term"]: int(r["df"])
-                    for r in self.df.filter(
-                        F.col("term").isin(missing)
-                    ).collect()
-                }
-            # vocabulary misses memoize as None: they can never appear on
-            # a matched posting row, so no lookup ever consumes them
-            for t in missing:
-                cache["df"][t] = got.get(t)
-        n_docs, avgdl = cache["stats"]
-        dfmap = {t: cache["df"][t] for t in terms if cache["df"][t] is not None}
-        return n_docs, avgdl, dfmap
+            memo = self._stats_memo = (r["n_docs"], r["avgdl"])
+        return memo
 
     def _scored(
         self, query_terms: DataFrame | None, prefilter_ids: DataFrame | None,
         round_to: int | None, literal_terms: list[str] | None = None,
         literal_qtf: dict[str, float] | None = None,
-        literal_aux: tuple | None = None,
     ) -> DataFrame:
-        """The ONE scoring pipeline: (qid, term, qtf) → (qid, id, score)
-        pre-top-k. score() and score_batch() share it so the BM25 formula
-        exists exactly once.
+        """The ONE scoring pipeline: → (qid, id, score) pre-top-k.
+        score() and score_batch() share it so the BM25 formula exists
+        exactly once. The two differ only in where qtf comes from — the
+        ``(qid, term, qtf)`` ``query_terms`` DataFrame, joined by
+        broadcast, or ``literal_qtf``, one constant query's per-term
+        counts as a folded map literal — and in the group key (a
+        constant query groups by id alone and re-attaches qid 0).
 
-        ``literal_terms`` (when the caller knows the query terms
-        driver-side) is semantically redundant with the inner join — but
-        as a LITERAL ``isin`` it pushes into the postings scan: parquet
-        row-group stats skip non-matching data, and on a bucketed
-        postings table it prunes to only the terms' buckets. The
-        broadcast join alone can't do either (no dynamic pushdown on
-        non-partition columns).
+        The query terms' posting rows are pruned first: ``literal_terms``
+        (when the caller knows the terms driver-side) is a LITERAL
+        ``isin`` that pushes into the postings scan — parquet row-group
+        stats skip non-matching data, and on a bucketed postings table it
+        prunes to only the terms' buckets; the batch shape also
+        semi-joins the query terms. A delete vector anti-joins next.
 
-        ``literal_qtf`` (r14; requires ``literal_terms``) carries the one
-        constant query's per-term counts as a FOLDED MAP LITERAL: qtf
-        comes from an in-row map lookup over the isin-pruned postings
-        instead of a broadcast join of the query-terms DataFrame — same
-        doubles, one fewer BroadcastExchange wave per serving call
-        (guide §2.4).
-
-        ``literal_aux`` (r14, from :meth:`_aux_literals`; requires
-        ``literal_qtf``) additionally inlines the query terms' df and
-        the corpus n_docs/avgdl as literals: the entire
-        ``df_eff × stats`` aux subtree (two BroadcastExchanges + a
-        BroadcastNestedLoopJoin per execution — plus, on the delete
-        path, the per-execution live df recount aggregation)
-        disappears. The idf ``log`` stays a JVM expression over the
-        same doubles — df counts are exact integers and n_docs/avgdl
-        round-trip bit-exact through collect() — so every score is
-        bit-identical to the join path."""
+        df is then ``count(*) over (partition by term)`` on those live
+        rows — exact in every crash state of a delete-applying compact,
+        since for a table already rewritten to survivors the anti-join is
+        a no-op. On term-bucketed postings the window is bucket-local (no
+        shuffle). It runs BEFORE the prefilter semi-join: corpus
+        statistics are index-global. n_docs/avgdl ride as literals
+        (:meth:`_stats_literals`)."""
         posts = self.postings
         if literal_terms:
             posts = posts.filter(F.col("term").isin(literal_terms))
-        df_eff = self.df
-        del_ids = getattr(self, "del_ids", None)
-        if del_ids is not None:
-            # soft deletes: drop deleted docs from the (literal-pruned)
-            # postings scan and derive each matched term's df LIVE from
-            # that same scan — not from the stored df table ± a
-            # correction. Live derivation is what keeps every crash
-            # state of the delete-applying compact exact: whether a
-            # table was already rewritten to survivors or not, the
-            # anti-join + recount land on the same numbers (read()
-            # applies the identical rule to doc_len/n_docs/avgdl).
-            posts = posts.join(F.broadcast(del_ids), "id", "left_anti")
-            # df is only ever consumed for MATCHED terms — without a
-            # literal pushdown (generic score_batch) restrict the recount
-            # to the query's terms instead of aggregating the whole
-            # vocabulary (review r08 #3); the recount's cost is then the
-            # matched posting lists, the same order as the match leg.
-            df_src = posts
-            if not literal_terms:
-                df_src = posts.join(
-                    F.broadcast(query_terms.select("term").distinct()),
-                    "term", "left_semi",
-                )
-            df_eff = df_src.groupBy("term").agg(F.count("*").alias("df"))
-        elif literal_terms:
-            # only the query's terms are ever consumed — the literal
-            # prune keeps the per-term broadcast query-sized instead of
-            # vocabulary-sized (r14; at scale the full df table is far
-            # too big to broadcast)
-            df_eff = df_eff.filter(F.col("term").isin(literal_terms))
-        if literal_qtf is not None:
-            if literal_qtf:
-                qtf = F.element_at(
-                    F.create_map(
-                        *(
-                            lit
-                            for t, c in literal_qtf.items()
-                            for lit in (F.lit(t), F.lit(float(c)))
-                        )
-                    ),
-                    F.col("term"),
-                )
-            else:
-                # zero-token query: the query-terms join this replaces
-                # matched NOTHING — an empty literal map must too (with
-                # no isin filter above, a NULL-qtf lookup would instead
-                # score every posting row NULL)
-                qtf = F.lit(None).cast("double")
-            # no qid column on this path — the query is a constant, so
-            # the score aggregation groups by id alone (the exchange
-            # carries one key, not a folded-literal second one); the
-            # constant qid is re-attached after the aggregation
-            matched = posts.select("id", "term", "tf", qtf.alias("qtf"))
-            if not literal_qtf:
-                matched = matched.filter(F.lit(False))
-        else:
-            matched = None  # batch shape: built below from the merged aux
-        if literal_aux is not None and literal_qtf is not None:
-            # constant query, no deletes: df/n_docs/avgdl ride as
-            # literals — no aux subtree at all (see docstring). The idf
-            # expression is UNCHANGED (same JVM log over the same
-            # doubles); it now evaluates per matched posting row instead
-            # of per aux row, a few thousand extra log calls traded for
-            # two BroadcastExchanges + a BNLJ per execution.
-            aux = None
-            n_docs_l, avgdl_l, dfmap = literal_aux
-            if dfmap:
-                df_col = F.element_at(
-                    F.create_map(
-                        *(
-                            lit
-                            for t, d in dfmap.items()
-                            for lit in (F.lit(t), F.lit(d).cast("long"))
-                        )
-                    ),
-                    F.col("term"),
-                )
-                idf_col = F.log(
-                    (F.lit(n_docs_l) - df_col + 0.5) / (df_col + 0.5) + 1.0
-                )
-            else:
-                # no query term exists in the vocabulary → zero matched
-                # rows; the idf column is never evaluated
-                idf_col = F.lit(None).cast("double")
-            avgdl_col = (
-                F.lit(avgdl_l)
-                if avgdl_l is not None
-                else F.lit(None).cast("double")
+        if literal_qtf is None:
+            posts = posts.join(
+                F.broadcast(query_terms.select("term")), "term", "left_semi"
             )
+        elif not literal_qtf:
+            # zero-token query: matches NOTHING (with no isin filter
+            # above, it would otherwise score every posting row)
+            posts = posts.filter(F.lit(False))
+        if self.del_ids is not None:
+            posts = posts.join(F.broadcast(self.del_ids), "id", "left_anti")
+        posts = posts.withColumn(
+            "df", F.count("*").over(Window.partitionBy("term"))
+        )
+        if prefilter_ids is not None:
+            posts = posts.join(prefilter_ids.select("id"), "id", "left_semi")
+        if literal_qtf is None:
+            matched = posts.join(F.broadcast(query_terms), "term")
+            group = ["qid", "id"]
         else:
-            # df/idf inputs and the single-row corpus stats ride ONE
-            # broadcast (df_eff × stats), not two — one fewer broadcast
-            # wave per query; idf is a per-TERM constant, so it is
-            # evaluated once per broadcast row (≤ vocab) instead of once
-            # per matched posting row — the same double from the same
-            # expression over the same inputs, just not recomputed 2M
-            # times in the batch shape (r14, guide §1.2 step 2
-            # "per-task work")
-            aux = df_eff.crossJoin(self.stats).withColumn(
-                "__idf",
-                F.log(
-                    (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                    + 1.0
+            qtf = F.element_at(
+                F.create_map(
+                    *(
+                        lit
+                        for t, c in literal_qtf.items()
+                        for lit in (F.lit(t), F.lit(float(c)))
+                    )
                 ),
-            )
-            idf_col = F.col("__idf")
-            avgdl_col = F.col("avgdl")
-        if matched is None:
-            # batch (query-terms DataFrame) shape, r14: the query terms
-            # and their df/idf/stats ride ONE broadcast — query_terms ⨝
-            # aux is query-sized, so the postings stream probes a single
-            # small hash relation and the vocabulary-wide aux broadcast
-            # leaves this path too (it is far too big to broadcast at
-            # scale); same matched rowset (every posted term exists in
-            # df by construction), same doubles
-            qaux = query_terms.join(aux, "term")
-            matched = posts.join(F.broadcast(qaux), "term")
-            if prefilter_ids is not None:
-                matched = matched.join(
-                    prefilter_ids.select("id"), "id", "left_semi"
-                )
-            matched = matched.join(self.doc_len, "id")
-        else:
-            if prefilter_ids is not None:
-                matched = matched.join(
-                    prefilter_ids.select("id"), "id", "left_semi"
-                )
-            matched = matched.join(self.doc_len, "id")
-            if aux is not None:
-                matched = matched.join(F.broadcast(aux), "term")
+                F.col("term"),
+            ) if literal_qtf else F.lit(None).cast("double")
+            matched = posts.withColumn("qtf", qtf)
+            group = ["id"]
+        matched = matched.join(self.doc_len, "id")
+        n_docs, avgdl = self._stats_literals()
+        avgdl_col = F.lit(avgdl).cast("double")
+        df = F.col("df")
+        idf = F.log((F.lit(n_docs) - df + 0.5) / (df + 0.5) + 1.0)
         tf = F.col("tf").cast("double")
         denom = tf + K1 * (1.0 - B + B * (F.col("dl") / avgdl_col))
-        term_score = F.col("qtf") * idf_col * (tf * (K1 + 1.0)) / denom
-        group = ["id"] if literal_qtf is not None else ["qid", "id"]
+        term_score = F.col("qtf") * idf * (tf * (K1 + 1.0)) / denom
         scored = matched.groupBy(*group).agg(F.sum(term_score).alias("score"))
         if round_to is not None:
             scored = scored.withColumn("score", F.round("score", round_to))
@@ -1285,15 +1093,11 @@ class BM25:
             terms[t] = terms.get(t, 0) + 1
         # the constant query's terms are known here — push them as a
         # literal isin so the postings scan reads only their row
-        # groups/buckets, the per-term counts as a folded map literal so
-        # no query-terms DataFrame is ever broadcast, and the terms'
-        # (live-derived once per instance when deletes exist) df +
-        # corpus stats as literals so the aux broadcast subtree
-        # disappears too (see _scored / _aux_literals)
+        # groups/buckets, and the per-term counts as a folded map literal
+        # so no query-terms DataFrame is ever broadcast (see _scored)
         scored = self._scored(
             None, prefilter_ids, round_to, list(terms),
             literal_qtf={t: float(c) for t, c in terms.items()},
-            literal_aux=self._aux_literals(list(terms)),
         ).select("id", "score")
         # single query → TakeOrderedAndProject, not a window
         return topk(scored, [F.col("score").desc(), F.col("id").asc()], k)

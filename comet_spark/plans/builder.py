@@ -722,8 +722,8 @@ class TextSearch:
         elif len(queries) <= 4:
             # r14: a HANDFUL of constant queries runs as per-leg literal
             # score() calls + the same aggregation — each leg takes the
-            # single-query shape above (literal qtf/df, TakeOrdered, no
-            # createDataFrame / qaux broadcast / per-qid window). The
+            # single-query shape above (literal qtf, TakeOrdered, no
+            # createDataFrame / query-terms broadcast / per-qid window). The
             # batch's per-qid top-k decomposes into per-leg top-k for
             # independent qids, and knn_aggregate groups by id alone, so
             # the result is identical to the score_batch route. Past a

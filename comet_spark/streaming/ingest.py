@@ -924,7 +924,7 @@ def doc_serving_views(
     and the merged document view itself for metadata prefilters /
     projections. One store, one commit history, three serving
     surfaces — the reference's hybrid_search_index read side.
-    ``cache`` keeps the BM25 side tables (postings/df/doc_len/stats)
+    ``cache`` keeps the BM25 side tables (postings/doc_len/stats)
     AND the merged DOCUMENT view persisted for repeat queries (r14: the
     docs view is a union + newest-wins window + delete anti-join over
     the committed segments — without pinning it every metadata
@@ -1933,7 +1933,7 @@ def _index_batch_state(spark, index_path: str, batch: DataFrame, id_col: str) ->
     - ``"committed"``: every batch id is in ``doc_len`` AND the stats
       ledger matches it (``sum(stats.n_docs) == count(doc_len)``).
       ``BM25.append`` writes doc_len first and stats last, so a
-      consistent ledger certifies the in-between postings/df segments
+      consistent ledger certifies the in-between postings segment
       landed too — the batch's index append fully committed.
     - ``"absent"``: no batch id present and the ledger is consistent —
       the index is healthy and has never seen this batch.

@@ -325,23 +325,11 @@ def test_bm25_append_matches_full_rebuild(spark, tmp_path):
     )
     assert "Bucketed: true" in plan and "SelectedBucketsCount" in plan
 
-    # the disjointness guard: re-appending an existing id raises...
+    # the disjointness guard: re-appending an existing id raises
     import pytest
 
     with pytest.raises(ValueError, match="already in the index"):
         BM25.append(spark, bpath, full.filter(F.col("id") == 5))
-    # ...and a pre-total_dl layout is refused with a rebuild hint
-    old = str(tmp_path / "old_layout")
-    BM25(base).write(old)
-    two_col = spark.read.parquet(f"{old}/stats").select("n_docs", "avgdl")
-    two_col.toPandas().to_parquet(f"{old}/stats/part-legacy.parquet")
-    import glob
-    import os
-
-    for f in glob.glob(f"{old}/stats/part-0*.parquet"):
-        os.remove(f)
-    with pytest.raises(ValueError, match="total_dl"):
-        BM25.append(spark, old, tail)
 
 
 def test_bm25_append_rejects_corrupt_meta(spark, tmp_path):
@@ -425,11 +413,12 @@ def test_bm25_index_writer_lock(spark, tmp_path):
 
 def test_bm25_compact_consolidates_segments(spark, tmp_path):
     """Postings-segment compaction (VERDICT r06 #1): build + append ×3 →
-    compact. The compacted index must score value-identically, re-engage
-    read()'s single-segment fast path (ONE stats row, collapsed df
-    partials), consolidate to one file per bucket, and keep the bucketed
+    compact. The compacted index must score value-identically, fold to
+    ONE stats row with no df table on disk (``df`` derives from the
+    postings), consolidate to one file per bucket, and keep the bucketed
     literal-term-pruned plan — all WITHOUT re-tokenizing the corpus."""
     import glob
+    import os
 
     import pyspark.sql.functions as F
     import pytest
@@ -459,14 +448,13 @@ def test_bm25_compact_consolidates_segments(spark, tmp_path):
         assert spark.read.parquet(f"{path}/stats").count() == 4
         BM25.compact(spark, path)
 
-        # single-segment shape again: one stats row, df already collapsed
+        # single-segment shape again: one stats row, no stored df
         assert spark.read.parquet(f"{path}/stats").count() == 1
-        raw_df = spark.read.parquet(f"{path}/df")
-        assert raw_df.groupBy("term").count().filter(F.col("count") > 1).count() == 0
-        assert {tuple(r) for r in raw_df.collect()} == want_df
+        assert not os.path.exists(f"{path}/df")
 
         back = BM25.read(spark, path)
         assert {tuple(r) for r in back.postings.collect()} == want_posts
+        assert {tuple(r) for r in back.df.collect()} == want_df
         got_stats = back.stats.first()
         assert (got_stats["n_docs"], got_stats["avgdl"], got_stats["total_dl"]) == (
             want_stats["n_docs"], want_stats["avgdl"], want_stats["total_dl"],
@@ -1446,6 +1434,7 @@ def test_bm25_tiered_compact_merges_small_segments_only(spark, tmp_path):
     fresh = BM25(full)
     want_scores = [tuple(r) for r in fresh.score("spark term1 data", k=0).collect()]
     want_posts = {tuple(r) for r in fresh.postings.collect()}
+    want_df = {tuple(r) for r in fresh.df.collect()}
     want_stats = fresh.stats.first()
 
     for buckets in (0, 4):
@@ -1483,14 +1472,14 @@ def test_bm25_tiered_compact_merges_small_segments_only(spark, tmp_path):
             assert all(after[n] == base_files[n] for n in kept)
             assert len(after) <= len(base_files) + 1
 
-        # single-segment shape: one stats row, df collapsed, exact values
+        # single-segment shape: one stats row, no stored df, exact values
         assert spark.read.parquet(f"{path}/stats").count() == 1
-        raw_df = spark.read.parquet(f"{path}/df")
-        assert raw_df.groupBy("term").count().filter(F.col("count") > 1).count() == 0
+        assert not os.path.exists(f"{path}/df")
         if buckets:
             spark.sql(f"DROP TABLE IF EXISTS {_postings_table_name(path)}")
         back = BM25.read(spark, path)
         assert {tuple(r) for r in back.postings.collect()} == want_posts
+        assert {tuple(r) for r in back.df.collect()} == want_df
         got_stats = back.stats.first()
         assert (got_stats["n_docs"], got_stats["avgdl"], got_stats["total_dl"]) == (
             want_stats["n_docs"], want_stats["avgdl"], want_stats["total_dl"],
@@ -1551,7 +1540,7 @@ def test_bm25_tiered_compact_crash_sweep(spark, tmp_path):
         from comet_spark.storage.store import _FS
 
         fs = _FS(spark, path)
-        for sub in ("postings", "doc_len", "df", "stats"):
+        for sub in ("postings", "doc_len", "stats"):
             assert not fs.exists(f"{path}/{sub}.old"), (k, sub)
             assert not fs.exists(f"{path}/{sub}.compacting"), (k, sub)
             assert not fs.exists(f"{path}/{sub}.tiermove"), (k, sub)
@@ -1619,7 +1608,7 @@ def test_bm25_full_compact_crash_sweep(spark, tmp_path):
         from comet_spark.storage.store import _FS
 
         fs = _FS(spark, path)
-        for sub in ("postings", "doc_len", "df", "stats"):
+        for sub in ("postings", "doc_len", "stats"):
             assert not fs.exists(f"{path}/{sub}.old"), (k, sub)
             assert not fs.exists(f"{path}/{sub}.compacting"), (k, sub)
         spark.sql(f"DROP TABLE IF EXISTS {_postings_table_name(path)}")
@@ -1786,7 +1775,7 @@ def test_bm25_delete_compact_crash_sweep(spark, tmp_path):
         from comet_spark.storage.store import _FS
 
         fs = _FS(spark, path)
-        for sub in ("postings", "doc_len", "df", "stats"):
+        for sub in ("postings", "doc_len", "stats"):
             assert not fs.exists(f"{path}/{sub}.old"), (k, sub)
             assert not fs.exists(f"{path}/{sub}.compacting"), (k, sub)
         assert not fs.exists(f"{path}/deletes"), k  # hard delete landed
@@ -1800,7 +1789,7 @@ def test_bm25_delete_compact_crash_sweep(spark, tmp_path):
 
 def test_bm25_append_writes_one_file_per_table(spark, tmp_path):
     """A small append lands as ONE part file in each of postings,
-    doc_len, df and stats: the writes keep the partitioning AQE picks for
+    doc_len and stats: the writes keep the partitioning AQE picks for
     the batch instead of one file per shuffle partition."""
     import glob
 
@@ -1812,7 +1801,7 @@ def test_bm25_append_writes_one_file_per_table(spark, tmp_path):
             [(i, f"spark doc {i} tables") for i in range(20)], "id bigint, text string"
         )
     ).write(path)
-    tables = ("postings", "doc_len", "df", "stats")
+    tables = ("postings", "doc_len", "stats")
 
     def _parts():
         return {t: set(glob.glob(f"{path}/{t}/part-*")) for t in tables}
@@ -1827,3 +1816,108 @@ def test_bm25_append_writes_one_file_per_table(spark, tmp_path):
     )
     after = _parts()
     assert {t: len(after[t] - before[t]) for t in tables} == {t: 1 for t in tables}
+
+
+def _bm25_live_corpus(spark):
+    return spark.createDataFrame(
+        [(i, f"spark data tables term{i % 5} word{i % 3}") for i in range(1, 41)],
+        "id bigint, text string",
+    )
+
+
+def test_bm25_first_seen_terms_cost_no_extra_job(spark, tmp_path):
+    """df is counted inside the scoring plan, so a query whose terms the
+    instance has never seen runs exactly the jobs its repeat does — no
+    driver-side df lookup job the first time a term shows up — and on a
+    term-bucketed index the count stays bucket-local (no term shuffle)."""
+    from comet_spark.operators.bm25 import BM25
+    from tests.test_local_frame import _jobs
+
+    path = str(tmp_path / "seen")
+    BM25(_bm25_live_corpus(spark)).write(path, buckets=4)
+    back = BM25.read(spark, path)
+    back.score("tables", k=3).collect()  # one-off per-instance stats fetch
+    query = "spark term3 word1"
+    first = _jobs(
+        spark, "bm25-first-seen", lambda: back.score(query, k=5).collect()
+    )
+    again = _jobs(
+        spark, "bm25-repeat", lambda: back.score(query, k=5).collect()
+    )
+    assert first == again
+    plan = back.score(query, k=5)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning(term" not in plan
+
+
+def test_bm25_scoring_shapes_have_no_term_exchange(spark, tmp_path):
+    """On an appended (two-segment), soft-deleted, term-bucketed index,
+    both score() and score_batch() count df bucket-locally: neither plan
+    shuffles by term."""
+    import pyspark.sql.functions as F
+
+    from comet_spark.operators.bm25 import BM25
+
+    full = _bm25_live_corpus(spark)
+    path = str(tmp_path / "shapes")
+    BM25(full.filter(F.col("id") <= 30)).write(path, buckets=4)
+    BM25.append(spark, path, full.filter(F.col("id") > 30))
+    BM25.delete(spark, path, [2, 33])
+    back = BM25.read(spark, path)
+    qterms = spark.createDataFrame(
+        [(0, "spark", 1.0), (0, "term3", 1.0), (1, "word1", 2.0)],
+        "qid bigint, term string, qtf double",
+    )
+    for df in (
+        back.score("spark term3 word1", k=5),
+        back.score_batch(qterms, k=5),
+        back.score_batch(qterms, k=5, literal_terms=["spark", "term3", "word1"]),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange hashpartitioning(term" not in plan, plan
+
+
+def test_bm25_write_paths_store_no_df_table(spark, tmp_path):
+    """No write path leaves a ``df`` table: write, append, delete and
+    both compact modes keep the index to postings, doc_len and stats."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from comet_spark.operators.bm25 import BM25
+
+    full = _bm25_live_corpus(spark)
+    path = str(tmp_path / "nodf")
+    steps = (
+        lambda: BM25(full.filter(F.col("id") <= 20)).write(path, buckets=4),
+        lambda: BM25.append(spark, path, full.filter(F.col("id") > 20)),
+        lambda: BM25.delete(spark, path, [4, 25]),
+        lambda: BM25.compact(spark, path, tiered=True),
+        lambda: BM25.compact(spark, path),
+    )
+    for i, step in enumerate(steps):
+        step()
+        assert not os.path.exists(f"{path}/df"), i
+
+
+def test_bm25_read_df_is_live_postings_per_term(spark, tmp_path):
+    """``BM25.read(...).df`` derives from the postings: it equals a fresh
+    build's df over the live docs, both without and with a delete
+    vector."""
+    import pyspark.sql.functions as F
+
+    from comet_spark.operators.bm25 import BM25
+
+    full = _bm25_live_corpus(spark)
+    path = str(tmp_path / "livedf")
+    BM25(full.filter(F.col("id") <= 30)).write(path, buckets=4)
+    BM25.append(spark, path, full.filter(F.col("id") > 30))
+
+    def _df(ix):
+        return sorted(map(tuple, ix.df.collect()))
+
+    assert _df(BM25.read(spark, path)) == _df(BM25(full))
+    deleted = [5, 10, 15, 20, 25, 30, 35, 40]  # every term0 doc
+    BM25.delete(spark, path, deleted)
+    got = _df(BM25.read(spark, path))
+    assert got == _df(BM25(full.filter(~F.col("id").isin(deleted))))
+    assert "term0" not in {t for t, _ in got}

@@ -84,12 +84,22 @@ def test_bm25_score_literal_qtf_equals_generic_batch(spark):
     assert lit_rows == gen_rows
 
 
-def test_bm25_literal_aux_equals_broadcast_aux(spark):
-    """Isolates the r14 aux-literal rewrite: score() (df/n_docs/avgdl as
-    literals) must be tuple-exact vs the same literal-qtf pipeline still
-    riding the df_eff × stats broadcast, including a query term missing
-    from the vocabulary; the literal plan must carry no aux subtree
-    (no BroadcastNestedLoopJoin)."""
+def _batch_rows(ix, spark, terms: dict[str, float]):
+    qterms = spark.createDataFrame(
+        [(0, t, c) for t, c in terms.items()],
+        "qid bigint, term string, qtf double",
+    )
+    return sorted(
+        (r["id"], r["score"]) for r in ix.score_batch(qterms, k=0).collect()
+    )
+
+
+def test_bm25_live_df_equals_fresh_build_and_batch(spark, tmp_path):
+    """score() counts df from the query terms' postings inside its plan:
+    on a read-back index it must be tuple-exact vs a fresh build over the
+    same docs and vs score_batch(), including a query term missing from
+    the vocabulary; the plan carries no aux subtree (no
+    BroadcastNestedLoopJoin)."""
     from comet_spark.operators.bm25 import BM25
 
     docs = spark.createDataFrame(
@@ -100,29 +110,24 @@ def test_bm25_literal_aux_equals_broadcast_aux(spark):
         ],
         "id bigint, text string",
     )
-    ix = BM25(docs)
-    query = "apple cherry zzz_not_in_vocab"  # exercises the vocab-miss memo
+    path = str(tmp_path / "ix")
+    BM25(docs).write(path)
+    back = BM25.read(spark, path)
+    query = "apple cherry zzz_not_in_vocab"
     terms = {"apple": 1.0, "cherry": 1.0, "zzz_not_in_vocab": 1.0}
-    lit = ix.score(query, k=10)
-    # same pipeline, aux delivered by broadcast instead of literals
-    old = (
-        ix._scored(None, None, 6, list(terms), literal_qtf=terms)
-        .select("id", "score")
-    )
-    assert sorted(map(tuple, lit.collect())) == sorted(
-        map(tuple, old.orderBy(F.col("score").desc(), "id").limit(10).collect())
-    )
+    lit = back.score(query, k=10)
+    lit_rows = sorted(map(tuple, lit.collect()))
+    assert lit_rows == sorted(map(tuple, BM25(docs).score(query, k=10).collect()))
+    assert lit_rows == _batch_rows(back, spark, terms)
     plan = lit._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
-    assert ix._aux_literals(["apple"]) is not None
 
 
-def test_bm25_literal_aux_delete_path_equals_live_recount(spark, tmp_path):
+def test_bm25_live_df_delete_path_equals_fresh_build(spark, tmp_path):
     """Delete-path twin: on a read-back index carrying a delete vector,
-    score() (df live-derived ONCE per instance, then literal) must be
-    tuple-exact vs the per-execution live-recount broadcast pipeline —
-    including a term whose postings are ALL deleted (df row disappears
-    on both paths) — and vs a from-scratch index over the survivors."""
+    score() must be tuple-exact vs a from-scratch index over the
+    survivors and vs score_batch() — including a term whose postings are
+    ALL deleted (its df row disappears on every path)."""
     from comet_spark.operators.bm25 import BM25
 
     docs = spark.createDataFrame(
@@ -142,15 +147,11 @@ def test_bm25_literal_aux_delete_path_equals_live_recount(spark, tmp_path):
     query = "apple cherry kumquat"
     terms = {"apple": 1.0, "cherry": 1.0, "kumquat": 1.0}
     lit_rows = sorted(map(tuple, back.score(query, k=0).collect()))
-    old = (
-        back._scored(None, None, 6, list(terms), literal_qtf=terms)
-        .select("id", "score")
-    )
-    assert lit_rows == sorted(map(tuple, old.collect()))
     fresh = BM25(docs.filter(~F.col("id").isin([3, 6])))
     assert lit_rows == sorted(
         map(tuple, fresh.score(query, k=0).collect())
     )
+    assert lit_rows == _batch_rows(back, spark, terms)
 
 
 def test_bm25_score_zero_token_query_matches_nothing(spark):

@@ -2010,12 +2010,12 @@ def test_bm25_ingest_stream_heals_crashed_compact_stats_swap(spark, store, tmp_p
     assert got == want
 
 
-def test_bm25_append_heals_crashed_df_swap(spark, tmp_path):
-    """Review regression: BM25.append on a compact crashed between the
-    df swap's renames must restore df.old first — append only ever
-    mode-appends into df, so without the heal it would recreate a
-    batch-only df (inflated idf for every pre-existing term) and the
-    next compact's cleanup would delete the original for good."""
+def test_bm25_append_heals_crashed_stats_swap(spark, tmp_path):
+    """BM25.append on a compact crashed between the stats swap's renames
+    must restore stats.old first — append only ever mode-appends into
+    stats, so without the heal it would recreate a batch-only stats
+    (n_docs/avgdl of one batch for every query) and the next compact's
+    cleanup would delete the original for good."""
     import pyspark.sql.functions as F
 
     from comet_spark.operators.bm25 import BM25
@@ -2027,10 +2027,10 @@ def test_bm25_append_heals_crashed_df_swap(spark, tmp_path):
     )
     want = [tuple(r) for r in BM25(full).score("spark tables", k=0).collect()]
 
-    path = str(tmp_path / "dfheal")
+    path = str(tmp_path / "statsheal")
     BM25(full.filter(F.col("id") <= 30)).write(path, buckets=4)
     fs = _FS(spark, path)
-    assert fs.rename(f"{path}/df", f"{path}/df.old")  # crashed df swap
+    assert fs.rename(f"{path}/stats", f"{path}/stats.old")  # crashed stats swap
 
     BM25.append(spark, path, full.filter(F.col("id") > 30))
     back = BM25.read(spark, path)
