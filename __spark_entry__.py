@@ -5177,13 +5177,13 @@ def _lsm_merge_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         terms[tok] = terms.get(tok, 0) + 1
     # r14: the constant query rides a folded map literal (no query-terms
     # DataFrame, no broadcast). The per-(seg, term) df and per-seg
-    # n_docs/avgdl ride as LITERALS too (the BM25._aux_literals move,
-    # entry M): they are per-segment index statistics of a constant
-    # query — collected once per (session, corpus) into the seg-tables
-    # memo and folded into the scoring expression, so the per-execution
-    # aux BroadcastExchange disappears. df counts are exact integers and
-    # n_docs/avgdl round-trip bit-exact through collect(); the idf log
-    # stays a JVM expression over the same doubles.
+    # n_docs/avgdl ride as LITERALS too (entry M; BM25 folds its own
+    # n_docs/avgdl the same way): they are per-segment index statistics
+    # of a constant query — collected once per (session, corpus) into
+    # the seg-tables memo and folded into the scoring expression, so the
+    # per-execution aux BroadcastExchange disappears. df counts are
+    # exact integers and n_docs/avgdl round-trip bit-exact through
+    # collect(); the idf log stays a JVM expression over the same doubles.
     qtf_map = F.create_map(
         *(lit for tok, c in terms.items() for lit in (F.lit(tok), F.lit(float(c))))
     )

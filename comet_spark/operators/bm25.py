@@ -79,38 +79,21 @@ def _postings_table_name(path: str) -> str:
 
 
 def _deletes_vector(spark, fs, path: str):
-    """The COMMITTED delete vector as a distinct-id DataFrame, or None.
+    """The COMMITTED delete vector as a distinct-id DataFrame, or None
+    when ``deletes`` holds no committed part file (listing and crash
+    states: ``storage.store._committed_parts``)."""
+    from comet_spark.storage.store import _committed_parts
 
-    Read from the explicit committed part-file list, not the directory:
-    a ``deletes`` dir with no committed part files — a first
-    :meth:`BM25.delete` whose write job crashed, or a full compact that
-    died midway through clearing the dir — IS the no-deletes state (no
-    delete row ever committed / every row's doc already dropped), and a
-    directory-level ``spark.read.parquet`` would refuse to infer a
-    schema from it, bricking every read/delete/compact with no heal
-    (review r08 #1). A read error on REAL committed files still
-    propagates loudly — silently dropping those would resurrect
-    soft-deleted docs."""
-    d = f"{path}/deletes"
-    parts = [
-        n for n, sz in fs.list_status(d)
-        if n.startswith("part-") and n.endswith(".parquet") and sz > 0
-    ]
-    if not parts:
-        return None
-    return spark.read.parquet(*[f"{d}/{n}" for n in parts]).select(
-        "id"
-    ).distinct()
+    parts = _committed_parts(fs, f"{path}/deletes")
+    return spark.read.parquet(*parts).select("id").distinct() if parts else None
 
 
-def _meta_buckets(spark, fs, path: str) -> int:
-    """The bucket count :meth:`BM25.write` recorded in ``meta`` — 0 only
-    when ``meta`` does not exist (an index written before it did). Any
-    other read error propagates: reading a damaged ``meta`` as
-    "unbucketed" would append bucket-less part files into a bucketed
-    ``postings``."""
-    if not fs.exists(f"{path}/meta"):
-        return 0
+def _meta_buckets(spark, path: str) -> int:
+    """The bucket count :meth:`BM25.write` recorded in ``meta``. A
+    missing or damaged ``meta`` fails loudly: ``write`` lands ``meta``
+    before ``stats``, so an index without it never committed, and
+    reading it as "unbucketed" would append bucket-less part files into
+    a bucketed ``postings``."""
     # the schema is known: reading with it skips the inference job
     meta = spark.read.schema(_META_SCHEMA).parquet(f"{path}/meta").first()
     return int(meta["buckets"])
@@ -466,7 +449,7 @@ class BM25:
         ix = cls.__new__(cls)
         fs = _FS(spark, path)
         if buckets is None:
-            buckets = _meta_buckets(spark, fs, path)
+            buckets = _meta_buckets(spark, path)
         if buckets > 0:
             name = _postings_table_name(path)
             if not spark.catalog.tableExists(name):
@@ -599,7 +582,7 @@ class BM25:
 
             fs = _FS(spark, path)
             _heal_tables(fs, path)
-            buckets = _meta_buckets(spark, fs, path)
+            buckets = _meta_buckets(spark, path)
             if check_disjoint:
                 # inside the lock: the probe is a read-then-write on the
                 # id ledger, exactly what the lock serializes
@@ -821,7 +804,7 @@ class BM25:
         fs = _FS(spark, path)
         with _index_writer_lock(spark, path, "compact"):
             _heal_tables(fs, path)
-            buckets = _meta_buckets(spark, fs, path)
+            buckets = _meta_buckets(spark, path)
             stats_rows = (
                 spark.read.schema(_STATS_SCHEMA).parquet(f"{path}/stats").collect()
             )

@@ -15,6 +15,9 @@ Spark rendering:
   against segments: each delete records the segment watermark it applies
   up to, so a document re-appended AFTER its delete is visible again
   (deletion vectors apply only to files present at delete time).
+- the store reads only what its writers write: every segment carries
+  ``__seq`` and every delete row an ``upto``. Earlier on-disk formats
+  have no reader and no migration.
 - *compaction* (J4) rewrites all segments into one and drops exactly the
   deletion files it applied — implemented correctly, not like the
   reference's stubbed merge (``storage_compaction.go:68-70`` writes empty
@@ -64,8 +67,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 __all__ = ["DocumentStore", "StoreLockedError"]
-
-_SEQ_MAX = (1 << 63) - 1  # "applies to every segment" delete watermark
 
 
 class _FS:
@@ -184,6 +185,22 @@ class _writer_lock:
     def __exit__(self, *exc):
         self._fs.delete(self._path)
         return False
+
+
+def _committed_parts(fs: _FS, d: str) -> list[str]:
+    """Paths of the committed, non-empty ``part-*.parquet`` files directly
+    under ``d`` — the one listing both delete vectors (this store's
+    ``_deletes``, a BM25 index's ``deletes``) are read through. A
+    directory with none of them (never written, a write job that
+    crashed before its commit, a compact that cleared it) IS the
+    no-deletes state; a directory-level ``spark.read.parquet`` would
+    instead refuse to infer a schema from it, or log that every path was
+    ignored. A read error on real committed files still propagates:
+    silently dropping those would resurrect deleted rows."""
+    return [
+        f"{d}/{n}" for n, sz in fs.list_status(d)
+        if n.startswith("part-") and n.endswith(".parquet") and sz > 0
+    ]
 
 
 def _swap_paths(cur: str) -> tuple[str, str, str]:
@@ -404,7 +421,6 @@ class DocumentStore:
         self.deletes_path = f"{path}/_deletes"
         self.lock_path = f"{path}/_lock"
         self._fs = _FS(spark, path)
-        self._legacy_deletes_checked = False
 
     def _lock(self, op: str) -> _writer_lock:
         return _writer_lock(self._fs, self.lock_path, op)
@@ -442,10 +458,6 @@ class DocumentStore:
             # heal first: on a data dir missing mid-swap the append would
             # start a fresh segment=0 and orphan every earlier row
             _heal_dir(self._fs, self.data_path)
-            # legacy delete files must be stamped BEFORE this append's
-            # segment number exists, so the new segment clears their
-            # watermark (re-append resurrects, J6)
-            self._migrate_legacy_deletes_locked()
             # segment number MUST be computed inside the lock: reading it
             # before would let two writers race to the same number (the
             # lock exists to protect exactly this sequence)
@@ -463,7 +475,6 @@ class DocumentStore:
         BEFORE this call; a later re-append of the same id is visible."""
         with self._lock("delete"):
             _heal_dir(self._fs, self.data_path)
-            self._migrate_legacy_deletes_locked()
             # watermark computed inside the lock — a stale read would
             # nondeterministically include/exclude a concurrent segment
             upto = self._next_segment()
@@ -479,108 +490,18 @@ class DocumentStore:
                 f"store at {self.path} has no segments yet — append() first"
             )
         # mergeSchema: schema must come from ALL files, not whichever file
-        # the reader samples first — a store mixing pre-__seq segments
-        # with sequenced ones would otherwise silently drop __seq
+        # the reader samples first — segments can carry different columns
+        # (layout columns a compact(recluster=...) added, batches appended
+        # without a vector column), and any of them may be sampled first
         return (
             self.spark.read.option("basePath", self.data_path)
             .option("mergeSchema", "true")
             .parquet(self.data_path)
         )
 
-    def _migrate_legacy_deletes_locked(self) -> None:
-        """One-time migration of pre-sequencing delete files, called from
-        the WRITE path with the writer lock already held (read() stays
-        strictly read-only — a reader without write access, or racing a
-        swap, must never be broken by migration): stamp missing ``upto``
-        with the store's CURRENT next-segment number. Equivalent to +inf
-        for every segment present now (the old delete keeps hiding
-        everything it hid), but — unlike +inf — the append about to land
-        (segment == that watermark) is visible again, honoring the J6
-        contract ('a later re-append of the same id is visible') on
-        migrated stores. Append-then-remove, never a directory swap:
-        stamped copies land as NEW files before any legacy file is
-        deleted, so lock-free concurrent readers always see every
-        delete (max-watermark merge makes the overlap idempotent) and a
-        crash at any point is safe. One mergeSchema read + one tiny
-        file-attribution job (the deletes table is id-sized), no
-        per-file footer loop."""
-        if self._legacy_deletes_checked:
-            return
-        files = [
-            f
-            for f in self._fs.listdir(self.deletes_path)
-            if f.endswith(".parquet") or f.startswith("part-")
-        ]
-        if not files:
-            self._legacy_deletes_checked = True
-            return
-        import posixpath
-
-        df = self.spark.read.option("mergeSchema", "true").parquet(self.deletes_path)
-        tagged = df.withColumn("__f", F.input_file_name())
-        if "upto" in df.columns:
-            legacy_rows = tagged.filter(F.col("upto").isNull())
-            if legacy_rows.limit(1).count() == 0:
-                self._legacy_deletes_checked = True  # modern store
-                return
-            # keep = files that actually carry stamped rows. Removals are
-            # computed as listing-minus-keep rather than attributing
-            # legacy files by their rows: EMPTY parquet files produce no
-            # rows for input_file_name to tag, and leaving an empty
-            # old-schema file behind would re-trigger this migration on
-            # every fresh handle forever (row-less files carry no deletes,
-            # so dropping even an empty modern file loses nothing).
-            keep = {
-                posixpath.basename(r["__f"])
-                for r in tagged.filter(F.col("upto").isNotNull())
-                .select("__f").distinct().collect()
-            }
-        else:
-            legacy_rows = tagged
-            keep = set()
-        # APPEND the stamped copies, THEN remove the superseded files —
-        # at no point does the deletes directory vanish or lose a delete
-        # (the directory swap compact() uses for the data dir would
-        # expose a no-deletes window to lock-free concurrent readers
-        # here, and a crash mid-swap would silently resurrect every
-        # deleted row). A lock-free reader whose in-flight scan raced
-        # the removals can still fail LOUDLY (FileNotFound on the
-        # vanished file — same exposure as compact() rewriting data
-        # files under a reader) and retries correctly; what can never
-        # happen is a silent wrong answer. While both copies coexist,
-        # read() takes max(upto) per id = +inf — exactly the
-        # pre-migration semantics.
-        # A crash between append and the deletions leaves legacy files
-        # behind; the next write-path migration re-stamps them
-        # (duplicate delete rows are idempotent under the max-watermark
-        # merge).
-        stamp = F.lit(self._next_segment()).cast("bigint")
-        stamped = legacy_rows.select(
-            F.col(self.id_col), stamp.alias("upto")
-        ).localCheckpoint()  # sever lineage from the dir we append into
-        # (the established recacheByPath guard — see neardup_ingest)
-        stamped.write.mode("append").parquet(self.deletes_path)
-        for name in files:
-            if name not in keep:
-                self._fs.delete(f"{self.deletes_path}/{name}")
-        self._legacy_deletes_checked = True
-
     def _deletes(self) -> DataFrame | None:
-        if not any(
-            f.endswith(".parquet") or f.startswith("part-")
-            for f in self._fs.listdir(self.deletes_path)
-        ):
-            return None
-        df = self.spark.read.option("mergeSchema", "true").parquet(self.deletes_path)
-        # READ-ONLY legacy fallback: delete files written before
-        # sequencing (no/null 'upto') read as +inf — they keep hiding
-        # everything they hid. The write path migrates them (stamping a
-        # finite watermark) the next time any append/delete/compact runs,
-        # which is exactly when a finite watermark first MATTERS: only a
-        # new append can resurrect an id.
-        if "upto" not in df.columns:
-            df = df.withColumn("upto", F.lit(_SEQ_MAX))
-        return df.withColumn("upto", F.coalesce(F.col("upto"), F.lit(_SEQ_MAX)))
+        parts = _committed_parts(self._fs, self.deletes_path)
+        return self.spark.read.parquet(*parts) if parts else None
 
     def _merged_view(self, df: DataFrame) -> DataFrame:
         """Newest-(segment, __seq)-wins per id + delete-watermark filter
@@ -589,10 +510,6 @@ class DocumentStore:
         applies it to just the small tail it merges — the filter
         semantics are identical by construction because this IS the read
         path's code."""
-        if "__seq" not in df.columns:  # pre-__seq stores
-            df = df.withColumn("__seq", F.lit(0))
-        else:  # pre-__seq segments mixed in surface as nulls under mergeSchema
-            df = df.withColumn("__seq", F.coalesce(F.col("__seq"), F.lit(0)))
         w = Window.partitionBy(self.id_col).orderBy(
             F.col("segment").desc(), F.col("__seq").desc()
         )

@@ -755,13 +755,9 @@ def _crud_resolved_view(
 
     # the stream's id column, recorded by the writer — assign_clusters
     # PRESERVES id_col, so windowing/joining on a hardcoded "id" would
-    # crash every non-default-id CRUD view (review r12 pass 5); "id" is
-    # the pre-meta default for artifacts written before the meta existed
-    idc = (
-        fs.read_text(f"{index_base}/_crud_meta")
-        if fs.exists(f"{index_base}/_crud_meta")
-        else "id"
-    )
+    # crash every non-default-id CRUD view (review r12 pass 5).
+    # _crud_boot writes the meta before the _crud marker.
+    idc = fs.read_text(f"{index_base}/_crud_meta")
     cols = full.columns
     pri = "__pri"  # version precedence: full rows = cur, tail rows = batch
     if live:
@@ -815,30 +811,29 @@ def _crud_resolved_view(
         dels_raw = spark.read.option("basePath", del_root).parquet(
             *[f"{del_root}/{n}" for n in del_live]
         )
-        if "with_tail" in dels_raw.columns:
-            # the deletes-committed / tail-absent window (review r12
-            # pass 2): the marker partition commits BEFORE its batch's
-            # tail, so a crash in between leaves committed deletes
-            # whose sibling upserts never landed — serving would apply
-            # the batch's deletes without its upserts, a state no
-            # batch boundary ever held. Markers record whether a tail
-            # is expected; fail loudly until the replay lands it.
-            live_tails = {int(n.split("=", 1)[1]) for n in live}
-            missing = sorted(
-                int(r["batch"])
-                for r in dels_raw.filter(F.col("with_tail"))
-                .select("batch").distinct().collect()
-                if int(r["batch"]) not in live_tails
+        # the deletes-committed / tail-absent window (review r12
+        # pass 2): the marker partition commits BEFORE its batch's
+        # tail, so a crash in between leaves committed deletes
+        # whose sibling upserts never landed — serving would apply
+        # the batch's deletes without its upserts, a state no
+        # batch boundary ever held. Markers record whether a tail
+        # is expected; fail loudly until the replay lands it.
+        live_tails = {int(n.split("=", 1)[1]) for n in live}
+        missing = sorted(
+            int(r["batch"])
+            for r in dels_raw.filter(F.col("with_tail"))
+            .select("batch").distinct().collect()
+            if int(r["batch"]) not in live_tails
+        )
+        if missing:
+            raise FileNotFoundError(
+                f"{who}: delete batch(es) {missing} under "
+                f"{del_root} committed with upserts whose tail dir "
+                "has not landed (crash between the marker and tail "
+                "writes, or a replay in flight) — serving would "
+                "apply deletes without their sibling upserts; "
+                "reread after the stream's replay commits"
             )
-            if missing:
-                raise FileNotFoundError(
-                    f"{who}: delete batch(es) {missing} under "
-                    f"{del_root} committed with upserts whose tail dir "
-                    "has not landed (crash between the marker and tail "
-                    "writes, or a replay in flight) — serving would "
-                    "apply deletes without their sibling upserts; "
-                    "reread after the stream's replay commits"
-                )
         dels = dels_raw.groupBy(idc).agg(
             F.max(F.col("batch").cast("bigint")).alias("__del")
         )
@@ -1918,9 +1913,12 @@ def _repair_index_from_store(
 def _stats_committed(spark, index_path: str) -> bool:
     """True iff the index's stats table is readable AND carries at least
     one row — the first full write's commit signal."""
+    from comet_spark.operators.bm25 import _STATS_SCHEMA
+
     try:
         return (
-            spark.read.parquet(f"{index_path}/stats").first() is not None
+            spark.read.schema(_STATS_SCHEMA).parquet(f"{index_path}/stats")
+            .first() is not None
         )
     except Exception:
         return False
@@ -1944,6 +1942,8 @@ def _index_batch_state(spark, index_path: str, batch: DataFrame, id_col: str) ->
 
     Cost: one stats collect + one count + one batch-sized semi-join
     against doc_len (doc-count-sized, never the postings)."""
+    from comet_spark.operators.bm25 import _STATS_SCHEMA
+
     # batch-side evaluation stays OUTSIDE the try blocks: an error in the
     # source dataframe must propagate (and fail/retry the micro-batch),
     # not masquerade as an index tear and trigger a spurious rebuild
@@ -1951,7 +1951,10 @@ def _index_batch_state(spark, index_path: str, batch: DataFrame, id_col: str) ->
     try:
         n_batch = ids.count()
         try:
-            stats_rows = spark.read.parquet(f"{index_path}/stats").collect()
+            stats_rows = (
+                spark.read.schema(_STATS_SCHEMA)
+                .parquet(f"{index_path}/stats").collect()
+            )
             if not stats_rows:
                 return "no_index"
         except Exception:

@@ -332,13 +332,16 @@ def test_bm25_append_matches_full_rebuild(spark, tmp_path):
         BM25.append(spark, bpath, full.filter(F.col("id") == 5))
 
 
-def test_bm25_append_rejects_corrupt_meta(spark, tmp_path):
-    """Only a MISSING ``meta`` (an index older than it) reads as
-    unbucketed. A damaged one must fail the append before it writes:
-    read as "0 buckets", append would land bucket-less part files in the
-    bucketed postings, which the tiered merge later rejects."""
+@pytest.mark.parametrize("damage", ["corrupt", "missing"])
+def test_bm25_append_rejects_corrupt_meta(spark, tmp_path, damage):
+    """A damaged or missing ``meta`` fails the append before it writes,
+    and fails the reopen too — read as "0 buckets", append would land
+    bucket-less part files in the bucketed postings, which the tiered
+    merge later rejects. ``write`` lands ``meta`` before ``stats``, so no
+    committed index lacks it."""
     import glob
     import os
+    import shutil
 
     from comet_spark.operators.bm25 import BM25
 
@@ -346,16 +349,19 @@ def test_bm25_append_rejects_corrupt_meta(spark, tmp_path):
         [(1, "spark joins tables"), (2, "spark streams data")],
         "id bigint, text string",
     )
-    path = str(tmp_path / "corrupt_meta")
+    path = str(tmp_path / f"{damage}_meta")
     BM25(docs).write(path, buckets=4)
-    for f in glob.glob(f"{path}/meta/*"):
-        if f.endswith(".parquet"):
-            with open(f, "wb") as fh:
-                fh.write(b"not a parquet file")
-        elif f.endswith(".crc"):
+    if damage == "missing":
+        shutil.rmtree(f"{path}/meta")
+    else:
+        for f in glob.glob(f"{path}/meta/*"):
+            if f.endswith(".parquet"):
+                with open(f, "wb") as fh:
+                    fh.write(b"not a parquet file")
+            elif f.endswith(".crc"):
+                os.remove(f)
+        for f in glob.glob(f"{path}/meta/.*.crc"):
             os.remove(f)
-    for f in glob.glob(f"{path}/meta/.*.crc"):
-        os.remove(f)
 
     def _postings():
         return {
@@ -369,6 +375,8 @@ def test_bm25_append_rejects_corrupt_meta(spark, tmp_path):
             spark, path,
             spark.createDataFrame([(3, "fast spark scans")], "id bigint, text string"),
         )
+    with pytest.raises(Exception):
+        BM25.read(spark, path)
     assert _postings() == before
 
 

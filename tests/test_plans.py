@@ -11,7 +11,21 @@ from tests.conftest import SF_DIR_SMALL
 
 
 def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+    """The executed plan's text with every scan's full ``Location``. A
+    scan node renders its metadata at the length in force when the plan
+    is built, and the default (100 chars) cuts a layout path short in a
+    deeply nested checkout, so the plan is built with that cap lifted."""
+    conf = df.sparkSession.conf
+    key = "spark.sql.maxMetadataStringLength"
+    prev = conf.get(key, None)
+    conf.set(key, str(1 << 20))
+    try:
+        return df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        if prev is None:
+            conf.unset(key)
+        else:
+            conf.set(key, prev)
 
 
 @pytest.fixture(scope="module")

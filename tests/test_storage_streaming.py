@@ -733,6 +733,35 @@ def test_store_reappend_after_delete_is_visible(spark, tmp_path):
     assert {r["id"] for r in store.read().collect()} == {1}
 
 
+def test_store_fresh_handle_writes_cost_no_extra_job(spark, tmp_path):
+    """A fresh handle's first append/delete on a store that already holds
+    a delete runs as many Spark jobs as its second: opening a handle
+    costs no probe of the delete files."""
+    from comet_spark.storage.store import DocumentStore
+    from tests.test_local_frame import _jobs
+
+    path = str(tmp_path / "freshjobs")
+    store = DocumentStore(spark, path)
+    store.append(spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, text string"))
+    store.delete(spark.createDataFrame([(2,)], "id bigint"))
+
+    def _delete(h, i):
+        return lambda: h.delete(spark.createDataFrame([(i,)], "id bigint"))
+
+    def _append(h, i):
+        return lambda: h.append(
+            spark.createDataFrame([(i, "c")], "id bigint, text string")
+        )
+
+    for op in (_delete, _append):
+        h = DocumentStore(spark, path)
+        first = _jobs(spark, f"fresh-{op.__name__}-1", op(h, 10))
+        second = _jobs(spark, f"fresh-{op.__name__}-2", op(h, 11))
+        assert first == second, (op.__name__, first, second)
+    got = {r["id"]: r["text"] for r in store.read().collect()}
+    assert got == {1: "a", 10: "c", 11: "c"}
+
+
 def test_store_duplicate_id_within_batch_deterministic(spark, tmp_path):
     """Within one segment the last-written row wins deterministically
     (total order via __seq), run after run."""
@@ -805,58 +834,6 @@ def test_store_writer_lock(spark, tmp_path):
     assert {r["id"] for r in store.read().collect()} == {1, 2}
     # the lock releases after each successful write
     assert not store._fs.exists(store.lock_path)
-
-
-def test_store_pre_sequencing_delete_files_readable(spark, tmp_path):
-    """Backcompat: delete files written by the pre-sequencing code had no
-    'upto' column — they must read as applying to every segment present
-    then (watermark +inf), not crash the scan."""
-    from comet_spark.storage.store import DocumentStore
-
-    store = DocumentStore(spark, str(tmp_path / "oldstore"))
-    store.append(spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, text string"))
-    # old-format delete file: bare ids, no upto
-    spark.createDataFrame([(2,)], "id bigint").write.mode("append").parquet(
-        store.deletes_path
-    )
-    assert {r["id"] for r in store.read().collect()} == {1}
-    # mixed old + new delete files coexist
-    store.delete(spark.createDataFrame([(1,)], "id bigint"))
-    assert store.read().count() == 0
-
-
-def test_store_legacy_delete_migrated_allows_reappend(spark, tmp_path):
-    """The J6 contract ('a later re-append of the same id is visible')
-    must hold for MIGRATED stores too: the WRITE path stamps
-    pre-sequencing delete files with the then-current next-segment
-    watermark before its own segment lands, so the old delete keeps
-    hiding every pre-existing segment but the new append resurrects the
-    id (the old +inf mapping made such deletes permanent). read() stays
-    strictly read-only — a reader without write access sees the legacy
-    +inf fallback, which only ever matters once a new append exists."""
-    import pyspark.sql.functions as F
-
-    from comet_spark.storage.store import DocumentStore
-
-    store = DocumentStore(spark, str(tmp_path / "migstore"))
-    store.append(spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, text string"))
-    spark.createDataFrame([(2,)], "id bigint").write.mode("append").parquet(
-        store.deletes_path
-    )
-    # reads do NOT migrate (read-only path): legacy file hides id 2
-    assert {r["id"] for r in store.read().collect()} == {1}
-    raw = spark.read.option("mergeSchema", "true").parquet(store.deletes_path)
-    assert "upto" not in raw.columns  # untouched by the read
-
-    # re-append after the old delete: append migrates first, id comes back
-    again = DocumentStore(spark, str(tmp_path / "migstore"))
-    again.append(spark.createDataFrame([(2, "b2")], "id bigint, text string"))
-    got = {r["id"]: r["text"] for r in again.read().collect()}
-    assert got == {1: "a", 2: "b2"}
-    # the delete file now carries a finite watermark (migrated once)
-    mig = spark.read.parquet(store.deletes_path)
-    assert "upto" in mig.columns
-    assert mig.filter(F.col("upto").isNull()).count() == 0
 
 
 def test_store_append_seq_col_deterministic(spark, tmp_path):
